@@ -4,23 +4,20 @@ Reference: sciencebeam_parser/processors/ref_matching.py —
 ``ChainedContentIdMatcher([SimpleContentIdMatcher, PartialContentIdMatcher])``
 applied per document (processors/fulltext/processor.py:242-267).
 
-Stages (first hit wins):
-  1. exact normalized-key equi-join (get_normalized_key_text, :19-24)
-  2. token-prefix key equi-join (get_token_prefix_normalized_key_text,
-     :27-33 — tokens containing digits are kept whole, others truncated to
+Chain (first hit wins):
+  1. exact normalized key (get_normalized_key_text, :19-24)
+  2. token-prefix key (get_token_prefix_normalized_key_text, :27-33 —
+     tokens containing digits are kept whole, others truncated to
      prefix_length BEFORE normalization)
   3. bag-of-tokens plurality vote (PartialContentIdMatcher, :66-95) with
      tie → no match.
 
-Stages 1-2 are FUSED into one prioritized (priority, key) join with a
-min-priority pick — semantically identical to the reference's
-run-then-anti-join chaining (both keys are cheap expressions), at one
-join + one window instead of two joins + an anti-join. Stage 3 runs only
-on the fused remainder.
-
-Key-collision semantics: the reference builds ``{key: content_id}`` dicts, so
-when two targets normalize to the same key the LAST one (target order) wins —
-reproduced with a row_number pick.
+Like the reference, the chain runs per document over dicts: citations and
+targets are unioned, co-located by doc_id, and one mapInPandas pass builds
+each document's ``{key: content_id}`` dicts (the LAST target by target_seq
+wins a shared key) and token index, then resolves its citations. A
+document holds a few hundred markers and targets, so the matcher is one
+shuffle plus one Python stage, and building it starts no Spark job.
 
 Deliberate deviation (documented): for stage 3 the reference returns the
 *first-encountered* content id unless its count ties the second-encountered
@@ -28,14 +25,22 @@ Deliberate deviation (documented): for stage 3 the reference returns the
 plurality winner, null when the top two counts tie — which matches every
 reference test (tests/processors/ref_matching_test.py).
 
-Scale: all three stages are equi-joins on normalized keys (shuffle by key);
-stage 3 explodes citation tokens against an inverted token index — the same
-inverted-index pattern as the n-gram dedup join. No cross joins.
+The key functions exist as Spark Columns (also used by graphic_matching)
+and as the kernel's Python twins, which follow Java regex semantics (ASCII
+``\\s`` and digits; ``trim`` strips only U+0020) so the two always agree.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+import re
+from collections import Counter
+from typing import Dict, List
+
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from sciencebeam_parser_spark.utils import repartition_for_python
 
 # utils/tokenizer.py:10-16 — every delimiter is a single char; each becomes
 # its own token (split keeps delimiters). \s covers \n\r\t\f.
@@ -46,26 +51,31 @@ from pyspark.sql import functions as F
 _DELIMITERS = "\u00a0 ([ \u2022*,:;?.!/#)-\u2212\u2013\u2010\"\u201c\u201d\u2018\u2019'`$]*\u2666\u2665\u2663\u2660@\u2020\u2021\u00a7\u00b6\u204b\u01c2"
 _DELIM_ALTERNATION = "(" + "|".join("\\" + c for c in _DELIMITERS) + "|\\s)"
 
+# Java regex classes (no UNICODE_CHARACTER_CLASS): \s and \d are ASCII-only,
+# where Python's str patterns would also match e.g. '\x1c', '\x85', '٣'
+_JAVA_SPACE = r"[ \t\n\x0b\f\r]"
+_PY_SPACE_RE = re.compile(_JAVA_SPACE)
+_PY_DIGIT_RE = re.compile("[0-9]")
+_PY_NON_KEY_RE = re.compile("[^a-z0-9]")
+_PY_DELIM_RE = re.compile(
+    "(" + "|".join(re.escape(c) for c in _DELIMITERS) + "|" + _JAVA_SPACE + ")"
+)
+
 
 def normalized_key(col: Column) -> Column:
     """get_normalized_key_text: lowercase, strip [^a-z0-9]."""
     return F.regexp_replace(F.lower(col), "[^a-z0-9]", "")
 
 
-def tokenized_tokens(col: Column) -> Column:
-    """iter_tokenized_tokens: split on delimiters (kept as tokens), drop
-    whitespace-only tokens. Implemented by fencing every delimiter with \\x00
-    and splitting — preserves punctuation tokens like the reference."""
-    fenced = F.regexp_replace(col, _DELIM_ALTERNATION, "\x00$1\x00")
-    return F.filter(
-        F.split(fenced, "\x00"), lambda t: F.trim(t) != ""
-    )
-
-
 def normalized_key_tokens(col: Column) -> Column:
-    """get_normalized_key_tokens: normalize each kept token (punctuation
-    tokens normalize to '' and ARE kept — they carry votes in stage 3)."""
-    return F.transform(tokenized_tokens(col), normalized_key)
+    """get_normalized_key_tokens: split on delimiters (kept as tokens), drop
+    whitespace-only tokens, normalize each kept token (punctuation tokens
+    normalize to '' and ARE kept — they carry votes in stage 3). The split
+    fences every delimiter with \\x00, preserving punctuation tokens like
+    the reference."""
+    fenced = F.regexp_replace(col, _DELIM_ALTERNATION, "\x00$1\x00")
+    kept = F.filter(F.split(fenced, "\x00"), lambda t: F.trim(t) != "")
+    return F.transform(kept, normalized_key)
 
 
 def token_prefix_key(col: Column, prefix_length: int = 1) -> Column:
@@ -83,6 +93,62 @@ def token_prefix_key(col: Column, prefix_length: int = 1) -> Column:
     )
 
 
+def _py_normalized_key(text: str) -> str:
+    return _PY_NON_KEY_RE.sub("", text.lower())
+
+
+def _py_normalized_key_tokens(text: str) -> List[str]:
+    fenced = _PY_DELIM_RE.sub("\x00\\1\x00", text)
+    return [_py_normalized_key(t) for t in fenced.split("\x00") if t.strip(" ")]
+
+
+def _py_token_prefix_key(text: str, prefix_length: int = 1) -> str:
+    return "".join(
+        _py_normalized_key(t if _PY_DIGIT_RE.search(t) else t[:prefix_length])
+        for t in _PY_SPACE_RE.split(text)
+    )
+
+
+class _DocMatcher:
+    """One document's chain: the reference's two ``{key: content_id}``
+    dicts and PartialContentIdMatcher's token index. Targets are added in
+    target_seq order, so a later target overwrites an earlier one's key."""
+
+    def __init__(self, prefix_length: int):
+        self.prefix_length = prefix_length
+        self.dicts: tuple = ({}, {})
+        self.index: Dict[str, Counter] = {}
+
+    def _keys(self, text: str):
+        return (
+            _py_normalized_key(text),
+            _py_token_prefix_key(text, self.prefix_length),
+        )
+
+    def add(self, content_id, text) -> None:
+        if not isinstance(text, str):
+            return
+        for d, key in zip(self.dicts, self._keys(text)):
+            if key:
+                d[key] = content_id
+        for tok in _py_normalized_key_tokens(text):
+            self.index.setdefault(tok, Counter())[content_id] += 1
+
+    def match(self, text):
+        if not isinstance(text, str):
+            return None
+        for d, key in zip(self.dicts, self._keys(text)):
+            if key in d:  # '' is never a key
+                return d[key]
+        votes: Counter = Counter()
+        for tok in _py_normalized_key_tokens(text):
+            votes.update(self.index.get(tok, ()))
+        top = votes.most_common(2)
+        if not top or (len(top) == 2 and top[0][1] == top[1][1]):
+            return None
+        return top[0][0]
+
+
 def match_content_ids(
     citations: DataFrame,
     targets: DataFrame,
@@ -92,115 +158,55 @@ def match_content_ids(
     """Resolve each citation to a target content id (or null).
 
     citations: (doc_id, citation_id, text); targets: (doc_id, content_id,
-    text, target_seq). Returns (doc_id, citation_id, target_content_id).
+    text, target_seq). Returns (doc_id, citation_id, target_content_id),
+    one row per citation, with doc_id typed as in the inputs.
     """
-    # Both inputs fan out to every chain stage (key builds, anti-join
-    # remainders, the inverted token index, the final left join). The
-    # repeated subtrees in the logical plan are deduplicated at runtime by
-    # Spark's ReuseExchange/ReuseSubquery — measured FASTER than forcing a
-    # .cache() here (an InMemoryRelation is a barrier AQE can't optimize
-    # through), so the inputs are deliberately left uncached.
     cit = citations.select("doc_id", "citation_id", "text")
     tgt = targets.select("doc_id", "content_id", "text", "target_seq")
 
-    # ---- stages 1+2 fused: prioritized key join ----
-    # The reference runs exact-key then prefix-key sequentially over the
-    # remainder; "first chain stage with a hit wins" is equivalently ONE
-    # join on a stacked (priority, key) relation with a min-priority pick —
-    # both key builds are cheap expressions, and the fusion replaces two
-    # equi-joins plus an anti-join (three shuffles of the citation set)
-    # with one join plus one window. Within a stage, {key: id} dict
-    # semantics still apply (last target wins per key, per priority).
-    def stacked_keys(df: DataFrame) -> DataFrame:
-        keys = F.array(
-            F.struct(
-                F.lit(1).alias("_prio"),
-                normalized_key(F.col("text")).alias("_key"),
-            ),
-            F.struct(
-                F.lit(2).alias("_prio"),
-                token_prefix_key(F.col("text"), prefix_length).alias("_key"),
-            ),
-        )
-        return (
-            df.select("*", F.explode(keys).alias("_pk"))
-            .select("*", "_pk._prio", "_pk._key")
-            .drop("_pk")
-            .filter(F.length("_key") > 0)
-        )
+    def null_of(df: DataFrame, name: str) -> Column:
+        return F.lit(None).cast(df.schema[name].dataType).alias(name)
 
-    w_last = W.partitionBy("doc_id", "_prio", "_key").orderBy(
-        F.desc("target_seq")
-    )
-    t12 = (
-        stacked_keys(tgt)
-        .withColumn("_rn", F.row_number().over(w_last))
-        .filter(F.col("_rn") == 1)
-        .select("doc_id", "_prio", "_key", "content_id")
-    )
-    w_best = W.partitionBy("doc_id", "citation_id").orderBy("_prio")
-    m12 = (
-        stacked_keys(cit)
-        .join(t12, ["doc_id", "_prio", "_key"], "inner")
-        .withColumn("_best", F.row_number().over(w_best))
-        .filter(F.col("_best") == 1)
-        .select(
-            "doc_id",
-            "citation_id",
-            F.col("content_id").alias("target_content_id"),
+    both = cit.select(
+        "doc_id", "citation_id", null_of(tgt, "content_id"), "text",
+        null_of(tgt, "target_seq"), F.lit(True).alias("_is_cit"),
+    ).unionByName(
+        tgt.select(
+            "doc_id", null_of(cit, "citation_id"), "content_id", "text",
+            "target_seq", F.lit(False).alias("_is_cit"),
         )
-        # m12 is consumed twice (the stage-3 anti-join remainder AND the
-        # final matched union); without a checkpoint each consumer embeds
-        # the whole stacked-key join + window subtree — and the remainder
-        # side additionally replays it under stage 3's joins, where a
-        # BroadcastExchange build side leaves no exchange node for
-        # ReuseExchange to dedup (the q62/q100/q132 pathology). One row
-        # per matched citation: checkpoint is control-plane sized.
-        .localCheckpoint(eager=False)
+    )
+    schema = T.StructType(
+        [
+            both.schema["doc_id"],
+            both.schema["citation_id"],
+            T.StructField("target_content_id", both.schema["content_id"].dataType),
+        ]
     )
 
-    # ---- stage 3: plurality vote over the unmatched remainder ----
-    rem2 = cit.join(m12, ["doc_id", "citation_id"], "left_anti")
-    # inverted token index over targets: one row per (doc, token, content_id)
-    # occurrence — multiplicity matters (defaultdict(list) appends)
-    tgt_tokens = tgt.select(
-        "doc_id", "content_id", F.explode(normalized_key_tokens(F.col("text"))).alias("tok")
-    )
-    cit_tokens = rem2.select(
-        "doc_id", "citation_id", F.explode(normalized_key_tokens(F.col("text"))).alias("tok")
-    )
-    votes = (
-        cit_tokens.join(tgt_tokens, ["doc_id", "tok"])
-        .groupBy("doc_id", "citation_id", "content_id")
-        .agg(F.count("*").alias("n_votes"))
-    )
-    w = W.partitionBy("doc_id", "citation_id").orderBy(
-        F.desc("n_votes"), F.asc("content_id")
-    )
-    # plurality-with-tie→null in ONE window pass: the top-ranked candidate
-    # wins iff the runner-up (lead over the same desc-votes order) has
-    # strictly fewer votes. Equivalent to "count of candidates at max_v is
-    # 1": the rank-1 row holds the max, so a second max-holder is exactly
-    # a rank-2 row with equal n_votes. Replaces two derivations of the
-    # ranked relation self-joined through a tie-count aggregate (three
-    # window functions + a groupBy + a join, with the votes subtree
-    # embedded on both join sides).
-    m3 = (
-        votes.select(
-            "*",
-            F.row_number().over(w).alias("_rn"),
-            F.lead("n_votes").over(w).alias("_next_v"),
+    def match_partition(batches):
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        cit_rows = pdf[pdf["_is_cit"]]
+        # a null doc_id joins no target (SQL equi-join semantics)
+        tgt_rows = pdf[~pdf["_is_cit"] & pdf["doc_id"].notna()].sort_values(
+            "target_seq", kind="stable", na_position="first"
         )
-        .filter(
-            (F.col("_rn") == 1)
-            & (F.col("_next_v").isNull() | (F.col("_next_v") < F.col("n_votes")))
-        )
-        .select("doc_id", "citation_id", F.col("content_id").alias("target_content_id"))
-    )
+        matchers: Dict[object, _DocMatcher] = {}
+        for doc_id, content_id, text in zip(
+            tgt_rows["doc_id"], tgt_rows["content_id"], tgt_rows["text"]
+        ):
+            if doc_id not in matchers:
+                matchers[doc_id] = _DocMatcher(prefix_length)
+            matchers[doc_id].add(content_id, text)
+        found = [
+            matchers[doc_id].match(text) if doc_id in matchers else None
+            for doc_id, text in zip(cit_rows["doc_id"], cit_rows["text"])
+        ]
+        yield cit_rows[["doc_id", "citation_id"]].assign(target_content_id=found)
 
-    matched = m12.unionByName(m3)
-    return (
-        cit.select("doc_id", "citation_id")
-        .join(matched, ["doc_id", "citation_id"], "left")
-        .select("doc_id", "citation_id", "target_content_id")
+    return repartition_for_python(both, "doc_id").mapInPandas(
+        match_partition, schema
     )

@@ -405,15 +405,13 @@ def run_fulltext_cascade(
             "text",
             "entity_group",
         )
-        # Adaptive marker probe: the ~12-stage fuzzy matcher
-        # (match_content_ids: stacked-key window join + inverted token
-        # index + plurality-vote windows) schedules its full shuffle
-        # chain even when there are zero citation markers — in which
-        # case marker_targets is empty by construction and the final
-        # left join is the identity plus a null column. Probing the
-        # CACHED entities relation (one filter over rows the downstream
-        # validity/output branches materialize anyway) skips all of it;
-        # with markers present the path is byte-identical to before.
+        # Adaptive marker probe: with zero citation markers marker_targets
+        # is empty by construction and the left join below is the identity
+        # plus a null column. Probing the CACHED entities relation (one
+        # filter over rows the downstream branches materialize anyway)
+        # skips the matcher's shuffle, Python stage and join. Without the
+        # probe a marker-free single-doc benchmark conversion runs 22 jobs
+        # instead of 14.
         if config.cache_entities and markers.isEmpty():
             entities = entities.withColumn(
                 "target_content_id", F.lit(None).cast("string")
@@ -425,18 +423,9 @@ def run_fulltext_cascade(
             "text",
             F.col("token_start").alias("target_seq"),
         )
-        matches = match_content_ids(
-            markers.select("doc_id", "citation_id", "text"), targets
-        )
-        marker_targets = (
-            markers.join(matches, ["doc_id", "citation_id"])
-            .select("doc_id", "model_name", "entity_group", "target_content_id")
-            # one row per matched marker — control-plane sized. Without the
-            # checkpoint, every downstream consumer of the joined entities
-            # relation re-embeds the ENTIRE ~12-stage matcher subtree
-            # (BroadcastExchange build sides defeat ReuseExchange); with
-            # it, the matcher computes once.
-            .localCheckpoint(eager=False)
+        matches = match_content_ids(markers, targets)
+        marker_targets = markers.join(matches, ["doc_id", "citation_id"]).select(
+            "doc_id", "model_name", "entity_group", "target_content_id"
         )
         # entity_group is only unique within (doc_id, model_name) — the
         # model key keeps marker matches from leaking onto other models'

@@ -176,9 +176,9 @@ def _oracle_sql() -> str:
                "(ref_matching.py:44-105)",
     doc="The three-stage matcher over per-doc targets: exact normalized key "
         "→ token-prefix key → bag-of-tokens plurality vote with tie→null, "
-        "each stage chained over the unmatched remainder by anti-join. All "
-        "stages are equi-joins on normalized keys (shuffle by key), stage 3 "
-        "an inverted token index — no cross joins at any scale.",
+        "first hit wins. Citations and targets co-locate by doc_id in one "
+        "shuffle, then one pandas pass runs the chain over per-document "
+        "dicts and a token index — no cross joins at any scale.",
 )
 def q97_citation_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     citations, targets = _q97_fixture(spark, sf_dir)

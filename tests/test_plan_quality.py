@@ -11,7 +11,11 @@ Spark-version formatting changes don't break them.
 """
 from __future__ import annotations
 
+import uuid
+from contextlib import contextmanager
+
 import pytest
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries import REGISTRY
@@ -159,6 +163,93 @@ class TestPythonStageParallelism:
             out.rdd.getNumPartitions()
             == spark.sparkContext.defaultParallelism
         )
+
+
+@contextmanager
+def job_group(spark):
+    """Run the block under a job group of its own; yields a callable that
+    counts the Spark jobs started in the group so far."""
+    sc = spark.sparkContext
+    group = f"plan-quality-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def marker_bearing_labels(labels):
+    """Relabel each doc's first five BODY-region fulltext tokens as
+    figure_marker (2 tokens) + figure (3 tokens), so every document has a
+    citation marker and a figure to match it to. The body gate must match
+    the mock segmentation rule ((seq-1)*10 in [n*3, n*7)): labels on
+    front/back tokens are dropped by the cascade's region join and would
+    leave the corpus marker-free."""
+    ft = labels.filter(F.col("model_name") == "fulltext").withColumn(
+        "_n", F.count("*").over(W.partitionBy("doc_id"))
+    )
+    scaled = (F.col("token_seq") - 1) * 10
+    ft = ft.withColumn(
+        "_body", (scaled >= F.col("_n") * 3) & (scaled < F.col("_n") * 7)
+    )
+    w = W.partitionBy("doc_id", "_body").orderBy("token_seq")
+    ft = ft.withColumn("_rn", F.row_number().over(w))
+    relabeled = ft.withColumn(
+        "label",
+        F.when(~F.col("_body"), F.col("label"))
+        .when(F.col("_rn") == 1, "B-<figure_marker>")
+        .when(F.col("_rn") == 2, "I-<figure_marker>")
+        .when(F.col("_rn") == 3, "B-<figure>")
+        .when(F.col("_rn").isin(4, 5), "I-<figure>")
+        .otherwise(F.col("label")),
+    ).drop("_rn", "_n", "_body")
+    return labels.filter(F.col("model_name") != "fulltext").unionByName(relabeled)
+
+
+class TestCitationMatcherJobs:
+    def test_matcher_is_one_shuffle_one_python_stage_no_job(self, spark):
+        from sciencebeam_parser_spark.operators.ref_matching import (
+            match_content_ids,
+        )
+
+        cit = spark.createDataFrame(
+            [("d1", "c1", "Fig 1")],
+            "doc_id string, citation_id string, text string",
+        )
+        tgt = spark.createDataFrame(
+            [("d1", "t1", "Figure 1", 0)],
+            "doc_id string, content_id string, text string, target_seq long",
+        )
+        with job_group(spark) as jobs:
+            out = match_content_ids(cit, tgt)
+            assert jobs() == 0
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert plan.count("MapInPandas") == 1
+
+    def test_marker_cascade_and_tei_job_count(self, spark):
+        """The marker-bearing cascade plus the TEI sink over the sf0.001
+        corpus (500 documents, one figure marker each). The per-document
+        matcher brought this from 29 jobs to 17."""
+        from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+        from sciencebeam_parser_spark.queries.pipeline_ops import (
+            _mock_labeled_tokens,
+        )
+        from sciencebeam_parser_spark.sinks.tei import entities_to_tei
+
+        toks, labels = _mock_labeled_tokens(spark, SF_DIR)
+        labels = marker_bearing_labels(labels).localCheckpoint()
+        toks = toks.localCheckpoint()
+        with job_group(spark) as jobs:
+            ents = run_fulltext_cascade(toks, labels)
+            tei = entities_to_tei(ents)
+            tei.write.format("noop").mode("overwrite").save()
+            n_jobs = jobs()
+        assert n_jobs <= 17
+        # as many markers resolve as under the SQL-chain matcher
+        assert ents.filter(F.col("target_content_id").isNotNull()).count() == 291
 
 
 class TestPartitionedLayout:
