@@ -36,6 +36,7 @@ def main():
     REGISTRY["q01_pricing_summary"].build(spark, sf_dir).count()
 
     per_query: dict[str, float] = {}
+    failed: list[str] = []
     total = 0.0
     # Streaming queries run LAST: a terminated streaming run leaves
     # state-store maintenance residue in the shared local JVM that
@@ -57,6 +58,7 @@ def main():
                 dt = time.time() - t0
             except Exception as e:  # pragma: no cover
                 print(f"bench error in {name}: {e}", file=sys.stderr)
+                failed.append(name)
                 continue
         per_query[name] = round(dt, 3)
         total += dt
@@ -74,6 +76,7 @@ def main():
         "value": round(total, 3),
         "unit": "sec",
         "queries": per_query,
+        "failed": failed,
         "sf": sf_val,
     }
     repo_dir = os.path.dirname(os.path.abspath(__file__))
@@ -108,6 +111,9 @@ def main():
         "queries": slowest,
         "families": families,
         "sf": sf_val,
+        # queries whose build and count() fallback both raised: they are
+        # absent from n and the totals, so name them instead of hiding
+        "failed": [n.split("_", 1)[0] for n in failed],
     }
     line = json.dumps(payload, separators=(",", ":"))
     if len(line) > 1900:  # never risk the tail capture truncating the line
@@ -115,6 +121,9 @@ def main():
         line = json.dumps(payload, separators=(",", ":"))
     if len(line) > 1900:  # still too long: fall back to the r8 top-15 shape
         payload["queries"] = dict(list(slowest.items())[:15])
+        line = json.dumps(payload, separators=(",", ":"))
+    if len(line) > 1900:  # a mass failure: bench_detail.json names them all
+        payload["failed"] = payload["failed"][:50]
         line = json.dumps(payload, separators=(",", ":"))
     print(line)
     spark.stop()

@@ -51,10 +51,8 @@ pruned, and per-bin compaction rewrites submit as concurrent jobs.
 """
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import tempfile
 import uuid
 from typing import Callable, Dict, List, Optional
 
@@ -117,13 +115,13 @@ class AppendOnlyBandStore:
     def __init__(
         self,
         spark: SparkSession,
-        root: Optional[str] = None,
+        root: str,
         compact_every: int = 0,
         target_bytes: int = 64 * 1024 * 1024,
         max_shard_files: int = 8,
     ):
         self.spark = spark
-        self.root = root or tempfile.mkdtemp(prefix="sbp_bandstore_")
+        self.root = root
         os.makedirs(self.root, exist_ok=True)
         self.compact_every = compact_every
         self.target_bytes = target_bytes
@@ -440,10 +438,3 @@ class AppendOnlyBandStore:
 
     def cleanup(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)
-
-
-# introspection/debug helper
-def dump_manifest(root: str) -> str:
-    head = read_head(root)
-    shards = [] if head is None else read_version(root, head)
-    return json.dumps({"head": head, "shards": shards})

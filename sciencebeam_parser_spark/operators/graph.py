@@ -52,7 +52,7 @@ def connected_components(
         # LogicalRDD preserves the partitioning, so every round's
         # sym-side shuffle is elided (only the changing labels relation
         # shuffles). Measured OFF by default: warm A/B at the 10x smoke
-        # (tools/ab_cc_partition.py, 496k-row components over 26.7M LSH
+        # (BASELINE.md §12, 496k-row components over 26.7M LSH
         # pairs) was a wash — 43.5 s vs 43.7 s min — because each round's
         # cost is the groupBy(doc_id) on the join OUTPUT (keyed by `a`),
         # which must shuffle regardless of sym's layout.

@@ -35,18 +35,6 @@ from pyspark.sql import types as T
 DEFAULT_MAX_GRAPHIC_DISTANCE = 0.3
 
 
-def normalized_box_cols(df: DataFrame) -> DataFrame:
-    """Add nx/ny/nw/nh page-normalized box columns
-    (get_normalized_bounding_box_for_page_coordinates_and_page_meta)."""
-    return df.select(
-        "*",
-        (F.col("x") / F.col("page_width")).alias("nx"),
-        (F.col("y") / F.col("page_height") + F.col("page_number")).alias("ny"),
-        (F.col("width") / F.col("page_width")).alias("nw"),
-        (F.col("height") / F.col("page_height")).alias("nh"),
-    )
-
-
 def gap_distance(
     x1: Column, y1: Column, w1: Column, h1: Column,
     x2: Column, y2: Column, w2: Column, h2: Column,

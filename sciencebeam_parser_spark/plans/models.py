@@ -137,10 +137,11 @@ class WeightTableLabelModel:
         executor (addFile = the download_manager/model-distribution path)."""
         import json
         import os
-        import tempfile
 
-        artifact = f"sbp_model_{name}_{spark.sparkContext.applicationId}.json"
-        path = os.path.join(tempfile.gettempdir(), artifact)
+        from sciencebeam_parser_spark.session import scratch_dir
+
+        artifact = f"sbp_model_{name}.json"
+        path = os.path.join(scratch_dir(spark, "model"), artifact)
         with open(path, "w", encoding="utf-8") as f:
             json.dump({"weights": weights, "transitions": transitions or {}}, f)
         spark.sparkContext.addFile(path)

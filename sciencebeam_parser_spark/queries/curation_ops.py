@@ -39,12 +39,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import scratch_dir, unique_name
 from sciencebeam_parser_spark.utils import checkpoint_big
 from sciencebeam_parser_spark.queries.text_ops import (
     _LSH_PAIRS_SQL,
@@ -269,9 +269,6 @@ def q169_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q170_RUNS = 0
-
-
 @register(
     "q170_streaming_static_join",
     # batch twin of the stream-static enrichment: every streamed event is
@@ -313,9 +310,7 @@ def q170_streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    global _Q170_RUNS
-    _Q170_RUNS += 1
-    name = f"q170_mem_{_Q170_RUNS}"
+    name = unique_name("q170_mem")
     writer = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -496,16 +491,8 @@ def q173_interval_bin_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "boundary) and the write parallelizes per input partition.",
 )
 def q174_jsonl_shard_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     docs = table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_jsonl_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "jsonl", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     docs.select("doc_id", "text", "lang", "source", "n_chars").write.mode(
         "overwrite"
@@ -517,8 +504,6 @@ def q174_jsonl_shard_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").alias("n_langs"),
     )
 
-
-_DOC_STREAM_RUNS = 0
 
 # q296's last-run band-store counters — the O(batch)-not-O(index) pin
 _LAST_Q296_STORE_STATS: dict = {}
@@ -597,9 +582,7 @@ def q175_streaming_incremental_dedup(
     fresh = arriving.join(ingested, on="h", how="left_anti").select(
         "doc_id", "source"
     )
-    global _DOC_STREAM_RUNS
-    _DOC_STREAM_RUNS += 1
-    name = f"q175_mem_{_DOC_STREAM_RUNS}"
+    name = unique_name("q175_mem")
     writer = (
         fresh.writeStream.format("memory")
         .queryName(name)
@@ -754,10 +737,6 @@ def q189_corrupt_record_handling(
 def q245_streaming_ingest_pipeline(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from sciencebeam_parser_spark.queries.events_ops import (
         _start_bounded_stream,
     )
@@ -769,11 +748,7 @@ def q245_streaming_ingest_pipeline(
         .filter(F.col("n_chars") >= 200)
         .join(known, "doc_id", "left_anti")
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_ingest_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "ingest", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1335,11 +1310,7 @@ def q295_streaming_lsh_dedup(
         .localCheckpoint()
     )
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q295_sink_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "q295_sink", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
 
@@ -1360,11 +1331,9 @@ def q295_streaming_lsh_dedup(
     arriving = _documents_stream(spark, sf_dir).filter(
         F.col("doc_id") % 2 == 1
     )
-    global _DOC_STREAM_RUNS
-    _DOC_STREAM_RUNS += 1
     writer = (
         arriving.writeStream.foreachBatch(sink_batch)
-        .queryName(f"q295_feb_{_DOC_STREAM_RUNS}")
+        .queryName(unique_name("q295_feb"))
         .trigger(availableNow=True)
     )
     _start_bounded_stream(spark, writer)
@@ -1478,11 +1447,7 @@ def q296_streaming_dedup_index_growth(
 
     store = AppendOnlyBandStore(
         spark,
-        root=os.path.join(
-            tempfile.gettempdir(),
-            f"sbp_q296_bands_{os.path.basename(sf_dir.rstrip('/'))}"
-            f"_{spark.sparkContext.applicationId}",
-        ),
+        root=scratch_dir(spark, "q296_bands", sf_dir),
         # ~5 batches per run → one mid-run compaction exercises the
         # executed q257 bin-pack + atomic manifest swap at any sf
         compact_every=3,
@@ -1544,8 +1509,6 @@ def q296_streaming_dedup_index_growth(
         .option("batchSize", str(batch_size))
         .load()
     )
-    global _DOC_STREAM_RUNS
-    _DOC_STREAM_RUNS += 1
     # the simple Python stream reader does not terminate under
     # availableNow (same contract as q282): run on a processing-time
     # trigger and poll until every corpus row has been seen, then stop
@@ -1553,7 +1516,7 @@ def q296_streaming_dedup_index_growth(
 
     writer = (
         stream.writeStream.foreachBatch(sink_batch)
-        .queryName(f"q296_feb_{_DOC_STREAM_RUNS}")
+        .queryName(unique_name("q296_feb"))
         .trigger(processingTime="0 seconds")
     )
     q = _start_bounded_stream(spark, writer, timeout=1, expect_timeout=True)
@@ -1658,11 +1621,7 @@ def q302_streaming_versioned_ingest(
     register_python_datasource(spark)
     expected = table(spark, sf_dir, "documents").count()
     batch_size = max(100, (expected + 4) // 5)
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q302_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q302_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 
@@ -1707,11 +1666,9 @@ def q302_streaming_versioned_ingest(
         .option("batchSize", str(batch_size))
         .load()
     )
-    global _DOC_STREAM_RUNS
-    _DOC_STREAM_RUNS += 1
     writer = (
         stream.writeStream.foreachBatch(sink_batch)
-        .queryName(f"q302_feb_{_DOC_STREAM_RUNS}")
+        .queryName(unique_name("q302_feb"))
         .trigger(processingTime="0 seconds")
     )
     q = _start_bounded_stream(spark, writer, timeout=1, expect_timeout=True)

@@ -31,6 +31,7 @@ from sciencebeam_parser_spark.operators.features import (
 )
 from sciencebeam_parser_spark.operators.ids import assign_ids
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import scratch_dir
 
 _WORDS_SQL = "string_split_regex(trim(text), '\\s+')"
 
@@ -1952,7 +1953,6 @@ def q121_alto_graphics_roundtrip(
 def q159_pdf_alto_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.sources.alto import parse_alto_tokens_df
     from sciencebeam_parser_spark.sources.pdf import (
@@ -1964,11 +1964,7 @@ def q159_pdf_alto_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"),
         F.encode("text", "utf-8").alias("content"),
     )
-    corpus_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_pdf_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    corpus_dir = scratch_dir(spark, "pdf", sf_dir)
     # fixture SETUP (not a result): the source-file corpus is immutable
     # per (session, sf_dir) — writing its 5000 files once per session
     # instead of once per build saves a full foreachPartition pass when

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries.registry import events_ts_unit, register, table
+from sciencebeam_parser_spark.session import unique_name
 from sciencebeam_parser_spark.utils import checkpoint_big
 
 
@@ -400,9 +401,6 @@ def q55_event_rate_by_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q134_RUNS = 0
-
-
 @register(
     "q134_streaming_tumbling_window",
     # REAL Structured Streaming on the driver surface: readStream over the
@@ -445,9 +443,7 @@ def q134_streaming_tumbling_window(
     )
     # unique sink name per invocation — a finished memory query can be
     # re-registered, but an active one with the same name cannot
-    global _Q134_RUNS
-    _Q134_RUNS += 1
-    name = f"q134_mem_{_Q134_RUNS}"
+    name = unique_name("q134_mem")
     writer = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -456,9 +452,6 @@ def q134_streaming_tumbling_window(
     )
     _start_bounded_stream(spark, writer)
     return _finish_memory_sink(spark, name)
-
-
-_Q135_RUNS = 0
 
 
 @register(
@@ -485,9 +478,7 @@ def q135_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    global _Q135_RUNS
-    _Q135_RUNS += 1
-    name = f"q135_mem_{_Q135_RUNS}"
+    name = unique_name("q135_mem")
     writer = (
         stream.writeStream.format("memory")
         .queryName(name)
@@ -496,9 +487,6 @@ def q135_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _start_bounded_stream(spark, writer)
     return _finish_memory_sink(spark, name)
-
-
-_Q140_RUNS = 0
 
 
 @register(
@@ -560,9 +548,7 @@ def q140_streaming_session_window(
         )
         .select("user_id", "session_start", "n_events", "duration_sec")
     )
-    global _Q140_RUNS
-    _Q140_RUNS += 1
-    name = f"q140_mem_{_Q140_RUNS}"
+    name = unique_name("q140_mem")
     writer = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -571,9 +557,6 @@ def q140_streaming_session_window(
     )
     _start_bounded_stream(spark, writer)
     return _finish_memory_sink(spark, name)
-
-
-_Q141_RUNS = 0
 
 
 @register(
@@ -611,9 +594,7 @@ def q141_streaming_stateful_totals(
     out = running_totals_with_state(
         _events_stream(spark, sf_dir), expire_idle=False
     )
-    global _Q141_RUNS
-    _Q141_RUNS += 1
-    name = f"q141_mem_{_Q141_RUNS}"
+    name = unique_name("q141_mem")
     writer = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -624,9 +605,6 @@ def q141_streaming_stateful_totals(
     return _finish_memory_sink(spark, name).select(
         "key", "n_events", F.round("total_value", 2).alias("total_value")
     )
-
-
-_Q291_RUNS = 0
 
 
 @register(
@@ -666,9 +644,7 @@ def q291_streaming_transform_with_state(
     except ImportError:
         has_protobuf = False
 
-    global _Q291_RUNS
-    _Q291_RUNS += 1
-    name = f"q291_mem_{_Q291_RUNS}"
+    name = unique_name("q291_mem")
     if has_protobuf:
         from sciencebeam_parser_spark.streaming.stateful import (
             ROCKSDB_PROVIDER,
@@ -1002,9 +978,6 @@ def funnel_via_aggregation(ev: DataFrame) -> DataFrame:
     )
 
 
-_Q162_RUNS = 0
-
-
 @register(
     "q162_streaming_sliding_window",
     # sliding 10-minute windows every 5 minutes: each event lands in TWO
@@ -1055,9 +1028,7 @@ def q162_streaming_sliding_window(
             "total_value",
         )
     )
-    global _Q162_RUNS
-    _Q162_RUNS += 1
-    name = f"q162_mem_{_Q162_RUNS}"
+    name = unique_name("q162_mem")
     writer = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -1512,9 +1483,6 @@ def q234_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q235_RUNS = 0
-
-
 @register(
     "q235_streaming_chained_windows",
     # TWO chained stateful operators in one streaming query (multi-
@@ -1572,9 +1540,7 @@ def q235_streaming_chained_windows(
         .agg(F.sum("n").cast("long").alias("n"))
         .select(F.col("wh.start").alias("hour_start"), "event_type", "n")
     )
-    global _Q235_RUNS
-    _Q235_RUNS += 1
-    name = f"q235_mem_{_Q235_RUNS}"
+    name = unique_name("q235_mem")
     writer = (
         hourly.writeStream.format("memory")
         .queryName(name)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import unique_name
 from sciencebeam_parser_spark.utils import checkpoint_big
 
 # rank fixed-point scale: 10^12 (85 * 10^12 stays far under int64 max)
@@ -262,18 +263,14 @@ _CLICK_PURCHASE_JOIN_COND = """
 """
 
 
-_SINK_COUNTER = __import__("itertools").count()
-
-
 def _run_append_sink(spark, joined, name: str):
     from sciencebeam_parser_spark.queries.events_ops import (
         _finish_memory_sink,
         _start_bounded_stream,
     )
 
-    # uniquify the memory-sink name here so callers don't each maintain
-    # a module-global run counter (duplicate queryName -> start error)
-    name = f"{name}_{next(_SINK_COUNTER)}"
+    # uniquify the memory-sink name (duplicate queryName -> start error)
+    name = unique_name(name)
     writer = (
         joined.writeStream.format("memory")
         .queryName(name)

@@ -19,12 +19,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import scratch_dir, unique_name
 
 
 @register(
@@ -44,22 +44,13 @@ from sciencebeam_parser_spark.queries.registry import register, table
 )
 def q149_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    # applicationId in the path: two concurrent sessions on the same
-    # dataset must not race on one directory
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_part_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "part", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     # partitionBy writes one directory per lang value; at corpus scale the
     # writer would also bucket by doc_id within each partition (bucketed.py)
     docs.write.mode("overwrite").partitionBy("lang").parquet(out_dir)
     pruned = spark.read.parquet(out_dir).filter(F.col("lang").isin("en", "de"))
     return pruned.select("doc_id", "lang", "n_chars")
-
-
-_Q150_RUNS = 0
 
 
 @register(
@@ -85,9 +76,6 @@ _Q150_RUNS = 0
         "to the batch oracle.",
 )
 def q150_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from sciencebeam_parser_spark.queries.events_ops import (
         _events_stream,
         _start_bounded_stream,
@@ -95,11 +83,7 @@ def q150_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_batch_shard,
     )
 
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q150_sink_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "q150_sink", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
 
@@ -114,12 +98,10 @@ def q150_streaming_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_id,
         )
 
-    global _Q150_RUNS
-    _Q150_RUNS += 1
     writer = (
         _events_stream(spark, sf_dir)
         .writeStream.foreachBatch(sink_batch)
-        .queryName(f"q150_feb_{_Q150_RUNS}")
+        .queryName(unique_name("q150_feb"))
         .trigger(availableNow=True)
     )
     _start_bounded_stream(spark, writer)
@@ -155,10 +137,10 @@ def q151_bucketed_colocated_join(
     )
 
     # per-session tag (applicationId): concurrent sessions on the same
-    # dataset must not race on the temp dirs or catalog table names
+    # dataset must not race on the catalog table names
     app = spark.sparkContext.applicationId.replace("-", "_")
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_") + "_" + app
-    base = os.path.join(tempfile.gettempdir(), f"sbp_bucketed_{tag}")
+    base = scratch_dir(spark, "bucketed", sf_dir)
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
     emb = table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id"),
@@ -217,11 +199,7 @@ def q157_asset_zip_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("</p></body></text></TEI>"),
         ).alias("tei_xml"),
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_zip_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "zip", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     # fixed partition count => stable archive membership run to run
     write_xml_zip(docs.repartition(8, "doc_id"), out_dir)
@@ -269,11 +247,7 @@ def q157_asset_zip_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q191_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_evo_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "evo", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "n_chars"
@@ -337,11 +311,7 @@ def q227_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     ev = table(spark, sf_dir, "events").select(
         F.col("ts").cast("date").alias("day"), "event_type", "value"
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_dpp_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "dpp", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     ev.write.mode("overwrite").partitionBy("day").parquet(out_dir)
     fact = spark.read.parquet(out_dir)
@@ -395,11 +365,7 @@ def q238_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_orc_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "orc", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     orders.write.mode("overwrite").orc(out_dir)
     back = spark.read.orc(out_dir)
@@ -448,11 +414,7 @@ def q239_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_pyds_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "pyds", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     docs.select("doc_id", "lang", "source", "n_chars").write.mode(
         "overwrite"
@@ -573,11 +535,7 @@ def q281_python_datasource_sink(
     )
 
     docs = table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_pysink_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "pysink", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
     register_python_datasource(spark)
     (
@@ -742,11 +700,7 @@ def q283_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_python_datasource(spark)
     docs = table(spark, sf_dir, "documents")
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_pystreamsink_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    out_dir = scratch_dir(spark, "pystreamsink", sf_dir)
     shutil.rmtree(out_dir, ignore_errors=True)
 
     # corpus size and gate-survivor count in ONE fused aggregate job

@@ -24,54 +24,48 @@ from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
 from sciencebeam_parser_spark.plans.training_data import (
     generate_model_data_lines,
 )
-from sciencebeam_parser_spark.queries.docpipe import _TOKENS_CTE, _tokens
+from sciencebeam_parser_spark.queries.docpipe import (
+    _TOKENS_CTE,
+    _tokens,
+    q159_pdf_alto_sidecar,
+)
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import scratch_dir, session_memo
 from sciencebeam_parser_spark.utils import checkpoint_big
 from sciencebeam_parser_spark.sinks.jats import tei_with_jats
 from sciencebeam_parser_spark.sinks.tei import entities_to_tei
 
 
-# Memoized default-config cascade: q88/q90/q130/q131 all consume the SAME
-# entities relation; re-deriving it per query costs ~6-17 s each at sf0.1.
-# This is the engine-level analog of the reference's ModelResultCache
-# (training/cli/generate_data.py:51-56 — LRU of model results keyed by
-# document): materialize once per session via localCheckpoint, reuse by
-# every downstream sink/roundtrip query. Keyed by applicationId so a new
-# session (new JVM, new executors) recomputes; only the current session's
-# entries are retained.
-_CASCADE_MEMO: dict = {}
-
-
 def _shared_cascade(spark: SparkSession, sf_dir: str):
     """(tokens, labels, entities) for the default cascade config, each
-    localCheckpoint'ed once per (session, sf_dir)."""
-    from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+    localCheckpoint'ed once per (session, sf_dir).
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    hit = _CASCADE_MEMO.get(key)
-    if hit is None:
-        toks, labels = _mock_labeled_tokens(spark, sf_dir)
-        # checkpoint_big = repartition(doc_id) BEFORE materializing + a
-        # DISK_ONLY store. The token relation is an explode of documents,
-        # so input-split sizing (pre-explode scan bytes) leaves it in a
-        # handful of partitions, and the default MEMORY_AND_DISK level
-        # unrolls deserialized rows in-heap — at 100x scale the
-        # checkpoint stage OOM'd the JVM (measured in the BASELINE scale
-        # smoke). doc_id partitioning also pre-aligns the cascade's
-        # window stages.
-        toks = checkpoint_big(toks, "doc_id")
-        labels = checkpoint_big(labels, "doc_id")
-        ents = checkpoint_big(run_fulltext_cascade(toks, labels))
-        hit = (toks, labels, ents)
-        # evict ONLY dead sessions' entries: a blanket clear() would also
-        # drop this session's other-sf_dir cascades (tests + bench in one
-        # process alternate datasets), re-paying the materialization each
-        # switch and stranding the evicted checkpoint blocks
-        for k in [k for k in _CASCADE_MEMO if k[0] != app_id]:
-            del _CASCADE_MEMO[k]
-        _CASCADE_MEMO[key] = hit
-    return hit
+    q88/q90/q130/q131 all consume the SAME entities relation; re-deriving
+    it per query costs ~6-17 s each at sf0.1. This is the engine-level
+    analog of the reference's ModelResultCache
+    (training/cli/generate_data.py:51-56 — LRU of model results keyed by
+    document). Memoized per sf_dir, not per query: tests + bench in one
+    process alternate datasets, and re-paying the materialization on
+    each switch would strand the older checkpoint blocks."""
+    return session_memo(
+        spark, ("cascade", sf_dir), lambda: _build_shared_cascade(spark, sf_dir)
+    )
+
+
+def _build_shared_cascade(spark: SparkSession, sf_dir: str):
+    toks, labels = _mock_labeled_tokens(spark, sf_dir)
+    # checkpoint_big = repartition(doc_id) BEFORE materializing + a
+    # DISK_ONLY store. The token relation is an explode of documents,
+    # so input-split sizing (pre-explode scan bytes) leaves it in a
+    # handful of partitions, and the default MEMORY_AND_DISK level
+    # unrolls deserialized rows in-heap — at 100x scale the
+    # checkpoint stage OOM'd the JVM (measured in the BASELINE scale
+    # smoke). doc_id partitioning also pre-aligns the cascade's
+    # window stages.
+    toks = checkpoint_big(toks, "doc_id")
+    labels = checkpoint_big(labels, "doc_id")
+    ents = checkpoint_big(run_fulltext_cascade(toks, labels))
+    return toks, labels, ents
 
 
 def _mock_labeled_tokens(spark: SparkSession, sf_dir: str):
@@ -2327,7 +2321,6 @@ def q266_xml_gazetteer_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import tempfile
     import xml.etree.ElementTree as ET
 
     from sciencebeam_parser_spark.sources.gazetteer import (
@@ -2356,12 +2349,7 @@ def q266_xml_gazetteer_roundtrip(
     for name in names:
         row = ET.SubElement(tbl, "{http://www.tei-c.org/ns/1.0}row")
         ET.SubElement(row, "{http://www.tei-c.org/ns/1.0}cell").text = name
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"xml_gazetteer_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = scratch_dir(spark, "xml_gazetteer", sf_dir)
     ET.ElementTree(tei).write(
         os.path.join(out_dir, "gazetteer.tei.xml"),
         encoding="utf-8",
@@ -2379,8 +2367,6 @@ def q266_xml_gazetteer_roundtrip(
 # --------------------------------------------------------------------------
 # §3.2 library API: source files → entities, one composed chain
 # --------------------------------------------------------------------------
-
-_CONVERT_MEMO: dict = {}
 
 _CONVERT_BASE_SQL = _TOKENS_CTE + """,
     base AS (
@@ -2416,37 +2402,32 @@ _CONVERT_BASE_SQL = _TOKENS_CTE + """,
         "doc_id.",
 )
 def q290_convert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sciencebeam_parser_spark.queries.docpipe import (
-        q159_pdf_alto_sidecar,
-    )
-
     # same memo discipline as _shared_cascade: repeated build() calls in
     # one session (bench double-timing, tests) must not rewrite the
     # fixture corpus or strand another set of checkpoint blocks
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    hit = _CONVERT_MEMO.get(key)
-    if hit is None:
-        parsed = q159_pdf_alto_sidecar(spark, sf_dir)
-        toks = parsed.select(
-            "doc_id",
-            (F.col("token_seq") + 1).cast("long").alias("token_seq"),
-            "text",
-        )
-        # the cascade references its inputs from many branches; without a
-        # checkpoint every branch re-runs the WHOLE ingest (file scan +
-        # sidecar + ALTO parse — measured ~20 plan copies at 10x). The
-        # token stream checkpoints FIRST so the labels derivation (and
-        # its own checkpoint) reads the materialized tokens instead of
-        # re-running the ingest a second time.
-        toks = checkpoint_big(toks, "doc_id")
-        toks, labels = _mock_labels_for(toks)
-        labels = checkpoint_big(labels, "doc_id")
-        hit = run_fulltext_cascade(toks, labels)
-        for k in [k for k in _CONVERT_MEMO if k[0] != app_id]:
-            del _CONVERT_MEMO[k]
-        _CONVERT_MEMO[key] = hit
+    hit = session_memo(
+        spark, ("convert", sf_dir), lambda: _build_convert(spark, sf_dir)
+    )
     return hit.select(
         "doc_id", "model_name", "entity_group", "entity_type", "region",
         "n_tokens", "content_id", "target_content_id", "is_valid_reference",
     )
+
+
+def _build_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    parsed = q159_pdf_alto_sidecar(spark, sf_dir)
+    toks = parsed.select(
+        "doc_id",
+        (F.col("token_seq") + 1).cast("long").alias("token_seq"),
+        "text",
+    )
+    # the cascade references its inputs from many branches; without a
+    # checkpoint every branch re-runs the WHOLE ingest (file scan +
+    # sidecar + ALTO parse — measured ~20 plan copies at 10x). The
+    # token stream checkpoints FIRST so the labels derivation (and
+    # its own checkpoint) reads the materialized tokens instead of
+    # re-running the ingest a second time.
+    toks = checkpoint_big(toks, "doc_id")
+    toks, labels = _mock_labels_for(toks)
+    labels = checkpoint_big(labels, "doc_id")
+    return run_fulltext_cascade(toks, labels)

@@ -17,6 +17,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sciencebeam_parser_spark.session import session_memo
+
 
 @dataclass(frozen=True)
 class Query:
@@ -62,17 +64,6 @@ def events_ts_unit(path: str) -> str:
     return t.split("[", 1)[1].split(",", 1)[0].rstrip("]")
 
 
-# (applicationId, sf_dir, name) -> unexecuted scan DataFrame. PLAN reuse,
-# not data caching: spark.read.parquet() re-reads the footer and re-lists
-# the path on EVERY call to infer the schema — ~90 ms of driver work per
-# call, and a 279-query suite builds ~500 scans (measured ~35-55 s of the
-# bench total). The memoized object is the immutable logical plan; every
-# action on it still scans the parquet files. Keyed by applicationId so a
-# new session (new JVM, possibly regenerated data) never sees a stale
-# handle; the synthetic sf dirs are read-only inputs within a session.
-_TABLE_MEMO: dict = {}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan for one synthetic table (filters/projections push down).
 
@@ -85,19 +76,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     * TIMESTAMP(MICROS, isAdjustedToUTC=false) — reads as TIMESTAMP_NTZ;
       cast to TIMESTAMP (session tz is pinned UTC, so the wall clock is
       preserved and epoch functions like unix_micros become available).
+
+    The scan is memoized per session: PLAN reuse, not data caching.
+    spark.read.parquet() re-reads the footer and re-lists the path on
+    EVERY call to infer the schema — ~90 ms of driver work per call, and
+    a 279-query suite builds ~500 scans (measured ~35-55 s of the bench
+    total). The memoized object is the immutable logical plan; every
+    action on it still scans the parquet files. The synthetic sf dirs
+    are read-only inputs within a session.
     """
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    # drop handles of other (stopped) sessions so a long-lived process
-    # that cycles sessions never accumulates dead plan references
-    for stale in [k for k in _TABLE_MEMO if k[0] != app_id]:
-        del _TABLE_MEMO[stale]
-    df = _read_table(spark, sf_dir, name)
-    _TABLE_MEMO[key] = df
-    return df
+    return session_memo(
+        spark, ("table", sf_dir, name),
+        lambda: _read_table(spark, sf_dir, name),
+    )
 
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import scratch_dir
 
 # Synthetic citation graph shared with q177/q222 (graph_ops): stride-97
 # ring edges give every doc out-degree 3 with no self-loops.
@@ -417,15 +418,13 @@ def q275_collated_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         "state equals the semantic aggregate, i.e. state inspection is "
         "trustworthy for debugging. At scale the reader opens only state "
         "files (one per shuffle partition), never the source data; the "
-        "checkpoint path carries the applicationId so concurrent "
+        "checkpoint lives in the session's scratch dir so concurrent "
         "sessions never collide.",
 )
 def q276_streaming_state_reader(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.queries.events_ops import (
         _events_stream,
@@ -433,10 +432,7 @@ def q276_streaming_state_reader(
     )
 
     app = spark.sparkContext.applicationId.replace("-", "_")
-    ckpt = os.path.join(
-        tempfile.gettempdir(),
-        f"sb_q276_{os.path.basename(os.path.normpath(sf_dir))}_{app}",
-    )
+    ckpt = scratch_dir(spark, "q276_ckpt", sf_dir)
     # fresh checkpoint per build; kept on disk afterwards — the returned
     # DataFrame reads the state files lazily
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -501,7 +497,6 @@ def q276_streaming_state_reader(
 )
 def q277_native_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
     import xml.etree.ElementTree as ET
 
     from pyspark.sql import types as T
@@ -518,12 +513,7 @@ def q277_native_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             root, "doc", {"id": str(r.doc_id), "lang": r.lang}
         )
         ET.SubElement(el, "content").text = r.text
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"native_xml_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = scratch_dir(spark, "native_xml", sf_dir)
     ET.ElementTree(root).write(
         os.path.join(out_dir, "corpus.xml"),
         encoding="utf-8",

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sciencebeam_parser_spark.queries.registry import register, table
+from sciencebeam_parser_spark.session import scratch_dir
 
 # --------------------------------------------------------------------------
 # HyperLogLog (m=64, md5-derived hash) — deterministic, engine-portable
@@ -1893,14 +1894,9 @@ def q297_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
     import shutil
-    import tempfile
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q297_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q297_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     before_dir = os.path.join(store, "before")
     manifest_path = os.path.join(store, "_MANIFEST.json")
@@ -2057,14 +2053,9 @@ def q299_manifest_delete_time_travel(
     import json
     import os
     import shutil
-    import tempfile
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q299_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q299_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 
@@ -2249,14 +2240,9 @@ def q300_manifest_merge_upsert(
     import json
     import os
     import shutil
-    import tempfile
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q300_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q300_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 
@@ -2430,7 +2416,6 @@ def q301_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.sinks.versioned_manifest import (
         commit_version,
@@ -2440,11 +2425,7 @@ def q301_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q301_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q301_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 
@@ -2602,7 +2583,6 @@ def q303_manifest_schema_evolution(
     import glob
     import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.sinks.versioned_manifest import (
         commit_version,
@@ -2611,11 +2591,7 @@ def q303_manifest_schema_evolution(
     )
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q303_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q303_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 
@@ -2743,7 +2719,6 @@ def q304_manifest_change_data_feed(
     import glob
     import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.sinks.versioned_manifest import (
         commit_version,
@@ -2752,11 +2727,7 @@ def q304_manifest_change_data_feed(
     )
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q304_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q304_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 
@@ -2963,7 +2934,6 @@ def q305_manifest_shallow_clone(
     import glob
     import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.sinks.versioned_manifest import (
         commit_version,
@@ -2972,11 +2942,7 @@ def q305_manifest_shallow_clone(
     )
 
     docs = table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q305_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    base = scratch_dir(spark, "q305", sf_dir)
     src_store = os.path.join(base, "source")
     clone_store = os.path.join(base, "clone")
     shutil.rmtree(base, ignore_errors=True)
@@ -3138,7 +3104,6 @@ def q306_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     from sciencebeam_parser_spark.sinks.versioned_manifest import (
         commit_version,
@@ -3147,11 +3112,7 @@ def q306_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sbp_q306_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    store = scratch_dir(spark, "q306_store", sf_dir)
     shutil.rmtree(store, ignore_errors=True)
     os.makedirs(store, exist_ok=True)
 

@@ -6,12 +6,24 @@ scale guidance: AQE on (runtime join-strategy + skew handling), Arrow on
 (pandas-UDF batches), shuffle partitions sized to cores locally — on a large
 cluster this would be set to ~2-3x total executor cores or left to AQE
 coalescing.
+
+Session-scoped resources — the reference's one-temp-dir-per-session idea
+(``ScienceBeamParserSession``, app/parser.py) — go through three helpers:
+``session_memo`` (driver-side objects built once per session),
+``scratch_dir`` (files under Spark's own driver temp dir, which Spark
+deletes on ``SparkContext.stop()`` and at JVM exit) and ``unique_name``
+(memory-sink / streaming query names).
 """
 from __future__ import annotations
 
+import itertools
 import os
+from typing import Callable, TypeVar
 
+from pyspark import SparkFiles
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -82,17 +94,49 @@ TABLES = (
 )
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Load the driver's synthetic parquet tables and register temp views.
+# (applicationId, key) -> value. Only the current session's entries are
+# kept: a long-lived process that cycles sessions never holds plans or
+# checkpoint handles of a stopped one.
+_MEMO: dict = {}
 
-    Parquet scans here are the engine's primary source (SURVEY §2B scans);
-    Catalyst pushes filters/projections into these scans.
+
+def session_memo(spark: SparkSession, key, factory: Callable[[], T]) -> T:
+    """``factory()`` run once per (session, key); later calls return the
+    same object. A new session recomputes (new JVM, possibly regenerated
+    data) and drops the entries of every other session. A factory that
+    raises memoizes nothing."""
+    app_id = spark.sparkContext.applicationId
+    full_key = (app_id, key)
+    if full_key in _MEMO:
+        return _MEMO[full_key]
+    for stale in [k for k in _MEMO if k[0] != app_id]:
+        del _MEMO[stale]
+    value = factory()
+    _MEMO[full_key] = value
+    return value
+
+
+def scratch_dir(spark: SparkSession, tag: str, sf_dir: str = "") -> str:
+    """``<SparkFiles root>/sbp/<tag>[_<basename(sf_dir)>]``, created.
+
+    The root is the driver temp dir of the active SparkContext, so the
+    path is private to the session and Spark removes it on stop — no
+    cleanup code. Same arguments give the same path within
+    a session. Executors that write here need it on shared storage on a
+    real cluster (local[] shares it trivially).
     """
-    dfs = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            dfs[name] = df
-    return dfs
+    name = tag
+    if sf_dir:
+        name += "_" + os.path.basename(sf_dir.rstrip("/"))
+    path = os.path.join(SparkFiles.getRootDirectory(), "sbp", name)
+    os.makedirs(path, exist_ok=True)
+    return path
+
+
+_NAMES = itertools.count(1)
+
+
+def unique_name(prefix: str) -> str:
+    """``<prefix>_<n>``, unique in this process: a finished memory sink
+    can be re-registered, but an active query with the same name cannot."""
+    return f"{prefix}_{next(_NAMES)}"

@@ -35,6 +35,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from sciencebeam_parser_spark.session import session_memo
+
 # rows per Arrow batch on the custom-source boundary: large enough to
 # amortize the per-batch crossing, small enough to bound worker memory
 # for arbitrarily large shard files
@@ -135,19 +137,16 @@ class JsonlShardReader(DataSourceReader):
             yield to_batch(ids, langs, chars)
 
 
-_REGISTERED_APPS: set = set()
-
-
 def register_python_datasource(spark) -> None:
-    """Idempotently register the data source with the session."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _REGISTERED_APPS:
-        return
-    spark.dataSource.register(JsonlShardDataSource)
-    spark.dataSource.register(JsonlShardSinkDataSource)
-    spark.dataSource.register(DocCorpusStreamSource)
-    spark.dataSource.register(JsonlStreamSinkDataSource)
-    _REGISTERED_APPS.add(app_id)
+    """Idempotently register the data sources with the session."""
+
+    def register_all() -> None:
+        spark.dataSource.register(JsonlShardDataSource)
+        spark.dataSource.register(JsonlShardSinkDataSource)
+        spark.dataSource.register(DocCorpusStreamSource)
+        spark.dataSource.register(JsonlStreamSinkDataSource)
+
+    session_memo(spark, "python_datasource", register_all)
 
 
 @dataclass

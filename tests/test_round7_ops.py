@@ -98,19 +98,14 @@ class TestTransitionsAutoGate:
 
 class TestQ299DeleteTimeTravel:
     def test_versions_and_structural_sharing(self, spark):
-        import glob
         import json
         import os
-        import tempfile
 
         from sciencebeam_parser_spark.queries.registry import REGISTRY, table
+        from sciencebeam_parser_spark.session import scratch_dir
 
-        rows = (
-            REGISTRY["q299_manifest_delete_time_travel"]
-            .build(spark, "/root/testdata/sf0.001")
-            .collect()
-        )
         sf = "/root/testdata/sf0.001"
+        rows = REGISTRY["q299_manifest_delete_time_travel"].build(spark, sf).collect()
         n_docs = table(spark, sf, "documents").count()
         v0 = [r for r in rows if r["version"] == 0]
         v1 = [r for r in rows if r["version"] == 1]
@@ -118,18 +113,7 @@ class TestQ299DeleteTimeTravel:
         deleted = n_docs - sum(r["n_docs"] for r in v1)
         assert 0 < deleted < n_docs  # the range genuinely deleted rows
 
-        store = max(
-            (
-                d
-                for d in glob.glob(
-                    os.path.join(
-                        tempfile.gettempdir(), "sbp_q299_store_sf0.001_*"
-                    )
-                )
-                if os.path.isdir(d)
-            ),
-            key=os.path.getmtime,
-        )
+        store = scratch_dir(spark, "q299_store", sf)
         man0 = json.load(
             open(os.path.join(store, "_MANIFEST-v0.json"))
         )["shards"]
@@ -150,19 +134,14 @@ class TestQ299DeleteTimeTravel:
 
 class TestQ300MergeUpsert:
     def test_merge_classes_and_sharing(self, spark):
-        import glob
         import json
         import os
-        import tempfile
 
         from sciencebeam_parser_spark.queries.registry import REGISTRY, table
+        from sciencebeam_parser_spark.session import scratch_dir
 
-        rows = (
-            REGISTRY["q300_manifest_merge_upsert"]
-            .build(spark, "/root/testdata/sf0.001")
-            .collect()
-        )
         sf = "/root/testdata/sf0.001"
+        rows = REGISTRY["q300_manifest_merge_upsert"].build(spark, sf).collect()
         docs = table(spark, sf, "documents")
         n_docs = docs.count()
         n_inserts = docs.filter("doc_id % 11 = 0").count()
@@ -176,18 +155,7 @@ class TestQ300MergeUpsert:
             r["total_chars"] for r in v0
         )
 
-        store = max(
-            (
-                d
-                for d in glob.glob(
-                    os.path.join(
-                        tempfile.gettempdir(), "sbp_q300_store_sf0.001_*"
-                    )
-                )
-                if os.path.isdir(d)
-            ),
-            key=os.path.getmtime,
-        )
+        store = scratch_dir(spark, "q300_store", sf)
         man1 = json.load(
             open(os.path.join(store, "_MANIFEST-v1.json"))
         )["shards"]
@@ -202,31 +170,17 @@ class TestQ301Vacuum:
         import glob
         import json
         import os
-        import tempfile
 
         from sciencebeam_parser_spark.queries.registry import REGISTRY, table
+        from sciencebeam_parser_spark.session import scratch_dir
 
-        rows = (
-            REGISTRY["q301_manifest_vacuum"]
-            .build(spark, "/root/testdata/sf0.001")
-            .collect()
-        )
-        n_docs = table(spark, "/root/testdata/sf0.001", "documents").count()
+        sf = "/root/testdata/sf0.001"
+        rows = REGISTRY["q301_manifest_vacuum"].build(spark, sf).collect()
+        n_docs = table(spark, sf, "documents").count()
         live = sum(r["n_docs"] for r in rows)
         assert 0 < live < n_docs  # post-delete HEAD, not the full corpus
 
-        store = max(
-            (
-                d
-                for d in glob.glob(
-                    os.path.join(
-                        tempfile.gettempdir(), "sbp_q301_store_sf0.001_*"
-                    )
-                )
-                if os.path.isdir(d)
-            ),
-            key=os.path.getmtime,
-        )
+        store = scratch_dir(spark, "q301_store", sf)
         # expired history physically gone
         assert not os.path.exists(os.path.join(store, "_MANIFEST-v0.json"))
         # every on-disk shard is referenced by the retained manifest —

@@ -4,25 +4,12 @@ store-level invariants the oracles can't see (metadata-only commits,
 file-reference sharing, feed durability, pruning counts)."""
 from __future__ import annotations
 
-import glob
 import json
 import os
-import tempfile
+
+from sciencebeam_parser_spark.session import scratch_dir
 
 SF = "/root/testdata/sf0.001"
-
-
-def _store(prefix):
-    return max(
-        (
-            d
-            for d in glob.glob(
-                os.path.join(tempfile.gettempdir(), prefix + "*")
-            )
-            if os.path.isdir(d)
-        ),
-        key=os.path.getmtime,
-    )
 
 
 def _manifest(store, v):
@@ -45,7 +32,7 @@ class TestQ303SchemaEvolution:
         # the evolved half carries the column, the old half backfills NULL
         assert 0 < with_q < n_docs
 
-        store = _store("sbp_q303_store_sf0.001_")
+        store = scratch_dir(spark, "q303_store", SF)
         v0 = _manifest(store, 0)
         v1 = _manifest(store, 1)
         # v1 carries EVERY v0 entry by reference (same path, same schema
@@ -85,7 +72,7 @@ class TestQ304ChangeDataFeed:
         for r in by_type["update_postimage"]:
             assert r["n_chars"] == pre[r["doc_id"]] + 1000
 
-        store = _store("sbp_q304_store_sf0.001_")
+        store = scratch_dir(spark, "q304_store", SF)
         v1 = _manifest(store, 1)
         cdf = [e for e in v1 if e.get("change_data")]
         data = [e for e in v1 if not e.get("change_data")]
@@ -115,7 +102,7 @@ class TestQ305ShallowClone:
         assert sum(r["n_docs"] for r in src) == n_docs
         assert 0 < sum(r["n_docs"] for r in clone) < n_docs
 
-        base = _store("sbp_q305_sf0.001_")
+        base = scratch_dir(spark, "q305", SF)
         src_store = os.path.join(base, "source")
         clone_store = os.path.join(base, "clone")
         # the source never advanced past its original commit
@@ -161,7 +148,7 @@ class TestQ306ZOrder:
         ).count()
         assert sum(r["n_docs"] for r in rows) == expect
 
-        store = _store("sbp_q306_store_sf0.001_")
+        store = scratch_dir(spark, "q306_store", SF)
 
         def kept(entries):
             return [

@@ -197,12 +197,3 @@ class TestTableHandleMemo:
         table(spark, SF_DIR, "documents")
         got = table(spark, SF_DIR, "documents").count()
         assert got == expected
-
-    def test_key_includes_application_id(self, spark):
-        from sciencebeam_parser_spark.queries import registry
-
-        keys = [
-            k for k in registry._TABLE_MEMO
-            if k[1:] == (SF_DIR, "documents")
-        ]
-        assert all(k[0] == spark.sparkContext.applicationId for k in keys)

@@ -13,6 +13,7 @@ import pytest
 
 from sciencebeam_parser_spark.queries import REGISTRY
 from sciencebeam_parser_spark.queries.registry import table
+from sciencebeam_parser_spark.session import scratch_dir
 from sciencebeam_parser_spark.queries.spark4_ops import (
     _MAX_DEPTH,
     _NEWTON_ROUNDS,
@@ -369,7 +370,6 @@ class TestPythonDataSourceSink:
         import json
         import glob
         import os
-        import tempfile
 
         from pyspark.sql import functions as F
 
@@ -377,11 +377,7 @@ class TestPythonDataSourceSink:
         total = out.agg(F.sum("n_docs")).collect()[0][0]
         n_src = table(spark, SF_DIR, "documents").count()
         assert total == n_src
-        sink_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"sbp_pysink_{os.path.basename(SF_DIR.rstrip('/'))}"
-            f"_{spark.sparkContext.applicationId}",
-        )
+        sink_dir = scratch_dir(spark, "pysink", SF_DIR)
         manifest = json.load(
             open(os.path.join(sink_dir, "_MANIFEST.json"))
         )
@@ -443,7 +439,6 @@ class TestPythonStreamSink:
         import glob
         import json
         import os
-        import tempfile
 
         from pyspark.sql import functions as F
 
@@ -462,11 +457,7 @@ class TestPythonStreamSink:
             .collect()
         }
         assert got == want and got
-        out_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"sbp_pystreamsink_{os.path.basename(SF_DIR.rstrip('/'))}"
-            f"_{spark.sparkContext.applicationId}",
-        )
+        out_dir = scratch_dir(spark, "pystreamsink", SF_DIR)
         manifests = glob.glob(os.path.join(out_dir, "_batch-*.json"))
         assert manifests, "no batch manifests published"
         listed = {
