@@ -21,30 +21,27 @@ stateful fold (not a per-run dispatch):
 
 Spark mapping: these grammars need ordered lookahead/lookbehind over an
 entire entity-run sequence with mutable accumulator state, so they run as
-per-document ``applyInPandas`` folds (SURVEY §7 "keep them as per-group
-pandas code, don't force SQL"). Input is the entity-run relation produced by
-``group_bio_entities`` (one row per tagged run, ordered by ``entity_group``);
-at 100 TB the grouping key ``doc_id`` bounds state to one document per task
-and the fold is Arrow-batched — no driver-side iteration, no shuffle beyond
-the single groupBy.
+per-document pandas folds through ``utils.map_documents`` (SURVEY §7 "keep
+them as per-group pandas code, don't force SQL"). Input is the entity-run
+relation produced by ``group_bio_entities`` (one row per tagged run,
+ordered by ``entity_group``); the grouping key bounds state to one
+document (or one name-model invocation) at a time, many documents share
+one Arrow batch, and the only shuffle is the one that co-locates them.
 """
 from __future__ import annotations
 
 import re
 from typing import Iterator, List, Optional, Tuple
 
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from sciencebeam_parser_spark.utils import repartition_for_python
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
+
+from sciencebeam_parser_spark.utils import map_documents
 
 # ---------------------------------------------------------------------------
 # name grammar (models/name/extract.py)
@@ -190,34 +187,23 @@ def extract_names(
     (doc_id, group_id, name_seq, part_seq, part_type, text, is_valid).
     """
 
-    cols = [f.name for f in NAME_PARTS_SCHEMA.fields]
-
-    def fold_partition(batches):
-        # one Python roundtrip per PARTITION, grouping in pandas — groups
-        # are tiny (one name-model invocation), so per-group applyInPandas
-        # overhead would dominate; repartition_for_python guarantees group
-        # completeness within the partition, concat is partition-bounded
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        out = []
-        for (doc_id, gid), g in pdf.groupby(["doc_id", group_col], sort=False):
-            g = g.sort_values("entity_group")
+    def fold_group(key, runs):
+        doc_id, gid = key
+        return [
+            (doc_id, gid, name_seq, part_seq, part_type, text,
+             "true" if valid else "false")
             for name_seq, (parts, valid) in enumerate(
-                _fold_names(list(zip(g["tag"], g["text"])))
-            ):
-                for part_seq, (part_type, text) in enumerate(parts):
-                    out.append(
-                        (doc_id, gid, name_seq, part_seq, part_type, text,
-                         "true" if valid else "false")
-                    )
-        yield pd.DataFrame(out, columns=cols)
+                _fold_names(list(zip(runs["tag"], runs["text"])))
+            )
+            for part_seq, (part_type, text) in enumerate(parts)
+        ]
 
-    return (
-        entity_runs.select("doc_id", group_col, "entity_group", "tag", "text")
-        .transform(repartition_for_python, "doc_id")
-        .mapInPandas(fold_partition, NAME_PARTS_SCHEMA)
+    return map_documents(
+        entity_runs.select("doc_id", group_col, "entity_group", "tag", "text"),
+        ["doc_id", group_col],
+        fold_group,
+        NAME_PARTS_SCHEMA,
+        order_by="entity_group",
     )
 
 
@@ -314,26 +300,12 @@ def extract_affiliations(entity_runs: DataFrame) -> DataFrame:
         flush()
         return out
 
-    cols = [f.name for f in AFF_PARTS_SCHEMA.fields]
-
-    def fold_partition(batches):
-        # groups are tiny (one affiliation block per doc): one Python
-        # roundtrip per PARTITION with pandas groupby beats per-group
-        # applyInPandas overhead; repartition_for_python keeps groups whole
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        out = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            g = g.sort_values("entity_group")
-            out.extend(fold_doc(doc_id, zip(g["tag"], g["text"])))
-        yield pd.DataFrame(out, columns=cols)
-
-    return (
-        entity_runs.select("doc_id", "entity_group", "tag", "text")
-        .transform(repartition_for_python, "doc_id")
-        .mapInPandas(fold_partition, AFF_PARTS_SCHEMA)
+    return map_documents(
+        entity_runs.select("doc_id", "entity_group", "tag", "text"),
+        "doc_id",
+        lambda doc_id, runs: fold_doc(doc_id, zip(runs["tag"], runs["text"])),
+        AFF_PARTS_SCHEMA,
+        order_by="entity_group",
     )
 
 
@@ -407,24 +379,12 @@ def extract_reference_segments(entity_runs: DataFrame) -> DataFrame:
                 emit(cid, pt, tx)
         return out
 
-    cols = [f.name for f in REF_SEGMENTS_SCHEMA.fields]
-
-    def fold_partition(batches):
-        # tiny per-doc groups: partition-batched fold (see extract_names)
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        out = []
-        for doc_id, g in pdf.groupby("doc_id", sort=False):
-            g = g.sort_values("entity_group")
-            out.extend(fold_doc(doc_id, zip(g["tag"], g["text"])))
-        yield pd.DataFrame(out, columns=cols)
-
-    return (
-        entity_runs.select("doc_id", "entity_group", "tag", "text")
-        .transform(repartition_for_python, "doc_id")
-        .mapInPandas(fold_partition, REF_SEGMENTS_SCHEMA)
+    return map_documents(
+        entity_runs.select("doc_id", "entity_group", "tag", "text"),
+        "doc_id",
+        lambda doc_id, runs: fold_doc(doc_id, zip(runs["tag"], runs["text"])),
+        REF_SEGMENTS_SCHEMA,
+        order_by="entity_group",
     )
 
 

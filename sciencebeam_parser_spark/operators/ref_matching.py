@@ -13,7 +13,7 @@ Chain (first hit wins):
      tie → no match.
 
 Like the reference, the chain runs per document over dicts: citations and
-targets are unioned, co-located by doc_id, and one mapInPandas pass builds
+targets are unioned with a side flag, and ``utils.map_documents`` builds
 each document's ``{key: content_id}`` dicts (the LAST target by target_seq
 wins a shared key) and token index, then resolves its citations. A
 document holds a few hundred markers and targets, so the matcher is one
@@ -35,12 +35,11 @@ import re
 from collections import Counter
 from typing import Dict, List
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sciencebeam_parser_spark.utils import repartition_for_python
+from sciencebeam_parser_spark.utils import map_documents
 
 # utils/tokenizer.py:10-16 — every delimiter is a single char; each becomes
 # its own token (split keeps delimiters). \s covers \n\r\t\f.
@@ -184,29 +183,20 @@ def match_content_ids(
         ]
     )
 
-    def match_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        cit_rows = pdf[pdf["_is_cit"]]
+    def match_doc(doc_id, doc):
+        is_cit = doc["_is_cit"]
+        cits = doc[is_cit]
+        matcher = _DocMatcher(prefix_length)
         # a null doc_id joins no target (SQL equi-join semantics)
-        tgt_rows = pdf[~pdf["_is_cit"] & pdf["doc_id"].notna()].sort_values(
-            "target_seq", kind="stable", na_position="first"
-        )
-        matchers: Dict[object, _DocMatcher] = {}
-        for doc_id, content_id, text in zip(
-            tgt_rows["doc_id"], tgt_rows["content_id"], tgt_rows["text"]
-        ):
-            if doc_id not in matchers:
-                matchers[doc_id] = _DocMatcher(prefix_length)
-            matchers[doc_id].add(content_id, text)
-        found = [
-            matchers[doc_id].match(text) if doc_id in matchers else None
-            for doc_id, text in zip(cit_rows["doc_id"], cit_rows["text"])
+        if doc_id is not None and len(cits):
+            tgts = doc[~is_cit].sort_values(
+                "target_seq", kind="stable", na_position="first"
+            )
+            for content_id, text in zip(tgts["content_id"], tgts["text"]):
+                matcher.add(content_id, text)
+        return [
+            (doc_id, citation_id, matcher.match(text))
+            for citation_id, text in zip(cits["citation_id"], cits["text"])
         ]
-        yield cit_rows[["doc_id", "citation_id"]].assign(target_content_id=found)
 
-    return repartition_for_python(both, "doc_id").mapInPandas(
-        match_partition, schema
-    )
+    return map_documents(both, "doc_id", match_doc, schema)

@@ -183,9 +183,6 @@ class CascadeConfig:
     # document's front raw_authors entities into ONE block before the name
     # model (the reference merges the layout blocks; default off)
     merge_raw_authors: bool = False
-    # the entities relation fans out to markers/targets/validity branches;
-    # materializing it once is the reference's result-cache analog (SURVEY §4)
-    cache_entities: bool = True
     segmentation_labels_front: tuple = ("<header>",)
     segmentation_labels_body: tuple = ("<body>", "<acknowledgement>", "<annex>")
     segmentation_labels_references: tuple = ("<references>",)
@@ -388,8 +385,9 @@ def run_fulltext_cascade(
         ),
     ).drop("_id_prefix")
 
-    if config.cache_entities:
-        entities = entities.cache()
+    # the entities relation fans out to markers/targets/validity branches;
+    # materializing it once is the reference's result-cache analog (SURVEY §4)
+    entities = entities.cache()
 
     if config.match_citations:
         markers = entities.filter(
@@ -412,7 +410,7 @@ def run_fulltext_cascade(
         # skips the matcher's shuffle, Python stage and join. Without the
         # probe a marker-free single-doc benchmark conversion runs 22 jobs
         # instead of 14.
-        if config.cache_entities and markers.isEmpty():
+        if markers.isEmpty():
             entities = entities.withColumn(
                 "target_content_id", F.lit(None).cast("string")
             )

@@ -6,32 +6,35 @@ process-reuse) and delft in-process impl; batch assembly packs N documents
 into one prediction call with blank-line separators and splits results back
 (models/model.py:207-214, 289-355).
 
-Spark mapping: ``groupBy(doc_id).applyInPandas`` replaces the manual batch
-marker protocol — Spark's grouping IS the batching, and the per-group UDF
-sorts by token_seq (order is not preserved through shuffles). The model
+Spark mapping: ``utils.map_documents`` replaces the manual batch marker
+protocol: it co-locates each document's tokens, batches many documents
+into one Python pass per partition, and hands each document to the model
+sorted by token_seq (order is not preserved through shuffles). The model
 implementation is pluggable:
 
 * ``FunctionLabelModel`` — a deterministic function (the mock-model trick,
   tests/processors/fulltext/model_mocks.py:46-135)
+* ``WeightTableLabelModel`` — a JSON weight-table artifact loaded once per
+  Python worker (the A32 executor-singleton pattern a wapiti/delft sidecar
+  model would use too)
 * ``DataFrameLabelModel`` — labels provided as an F2 token_labels table
   (pure join, no UDF at all)
-* real sidecar models (wapiti/delft) would subclass with an executor-local
-  lazy singleton (A32 pattern) inside the UDF.
 
 The alignment assert (models/model.py:317-327) is preserved: a model must
 return exactly one label per input token.
 """
 from __future__ import annotations
 
+from itertools import repeat
 from typing import Callable, Sequence
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from sciencebeam_parser_spark.utils import repartition_for_python
 from pyspark.sql import types as T
+
+from sciencebeam_parser_spark.utils import executor_singleton, map_documents
 
 LABELS_OUT_SCHEMA = T.StructType(
     [
@@ -43,7 +46,39 @@ LABELS_OUT_SCHEMA = T.StructType(
 )
 
 
-class FunctionLabelModel:
+class _PythonLabelModel:
+    """A model that labels one document at a time in Python: subclasses
+    give ``doc_labeler()``, a picklable function from one document's tokens
+    (sorted by token_seq) to its labels."""
+
+    name: str
+
+    def doc_labeler(self) -> Callable[[pd.DataFrame], Sequence[str]]:
+        raise NotImplementedError
+
+    def apply(self, tokens: DataFrame) -> DataFrame:
+        name, label_doc = self.name, self.doc_labeler()
+
+        def label(doc_id, doc):
+            labels = list(label_doc(doc))
+            # alignment assert (models/model.py:317-327)
+            if len(labels) != len(doc):
+                raise ValueError(
+                    f"model {name}: {len(labels)} labels for "
+                    f"{len(doc)} tokens"
+                )
+            return zip(repeat(doc_id), doc["token_seq"], repeat(name), labels)
+
+        return map_documents(
+            tokens.select("doc_id", "token_seq", "text"),
+            "doc_id",
+            label,
+            LABELS_OUT_SCHEMA,
+            order_by="token_seq",
+        )
+
+
+class FunctionLabelModel(_PythonLabelModel):
     """Deterministic per-token labeling function — executor-side, no state.
 
     ``fn(texts: list[str]) -> list[str]`` labels one document's tokens in
@@ -54,49 +89,12 @@ class FunctionLabelModel:
         self.name = name
         self.fn = fn
 
-    def apply(self, tokens: DataFrame) -> DataFrame:
-        name, fn = self.name, self.fn
-
-        def label_partition(batches):
-            # the reference's batch assembly (models/model.py:207-214) packs
-            # N documents into ONE prediction call; the Spark analog is one
-            # Python roundtrip per PARTITION with a pandas groupby, not one
-            # applyInPandas call per doc. repartition_for_python keeps each
-            # document whole within its partition.
-            pdfs = list(batches)
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            outs = []
-            for doc_id, g in pdf.groupby("doc_id", sort=False):
-                g = g.sort_values("token_seq")
-                labels = list(fn(list(g["text"])))
-                # alignment assert (models/model.py:317-327)
-                if len(labels) != len(g):
-                    raise ValueError(
-                        f"model {name}: {len(labels)} labels for "
-                        f"{len(g)} tokens"
-                    )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": g["doc_id"].values,
-                            "token_seq": g["token_seq"].values,
-                            "model_name": name,
-                            "label": labels,
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-        return (
-            tokens.select("doc_id", "token_seq", "text")
-            .transform(repartition_for_python, "doc_id")
-            .mapInPandas(label_partition, schema=LABELS_OUT_SCHEMA)
-        )
+    def doc_labeler(self) -> Callable[[pd.DataFrame], Sequence[str]]:
+        fn = self.fn
+        return lambda doc: fn(list(doc["text"]))
 
 
-class WeightTableLabelModel:
+class WeightTableLabelModel(_PythonLabelModel):
     """A real (non-injected) sequence-labeling model: a linear scorer over
     binary token features with a JSON weight-table ARTIFACT, distributed to
     executors via SparkContext.addFile and lazily loaded once per Python
@@ -229,51 +227,20 @@ class WeightTableLabelModel:
             prev_tag = tag
         return out
 
-    def apply(self, tokens: DataFrame) -> DataFrame:
-        name, artifact, mode = self.name, self.artifact_name, self.decode
-        decode_doc = self._decode_doc
-        load = self._load_artifact
+    def doc_labeler(self) -> Callable[[pd.DataFrame], Sequence[str]]:
+        artifact, mode = self.artifact_name, self.decode
+        decode_doc, load = self._decode_doc, self._load_artifact
 
-        def label_partition(batches):
-            from sciencebeam_parser_spark.utils import executor_singleton
-
+        def label_doc(doc):
             model = executor_singleton(
                 f"weight_model:{artifact}", lambda: load(artifact)
             )
-            weights, transitions = model["weights"], model["transitions"]
-            pdfs = list(batches)
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True)
-            outs = []
-            for _, g in pdf.groupby("doc_id", sort=False):
-                g = g.sort_values("token_seq")
-                labels = decode_doc(
-                    list(g["text"]), list(g["token_seq"]),
-                    weights, transitions, mode,
-                )
-                if len(labels) != len(g):
-                    raise ValueError(
-                        f"model {name}: {len(labels)} labels for "
-                        f"{len(g)} tokens"
-                    )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "doc_id": g["doc_id"].values,
-                            "token_seq": g["token_seq"].values,
-                            "model_name": name,
-                            "label": labels,
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
+            return decode_doc(
+                list(doc["text"]), list(doc["token_seq"]),
+                model["weights"], model["transitions"], mode,
+            )
 
-        return (
-            tokens.select("doc_id", "token_seq", "text")
-            .transform(repartition_for_python, "doc_id")
-            .mapInPandas(label_partition, schema=LABELS_OUT_SCHEMA)
-        )
+        return label_doc
 
 
 class DataFrameLabelModel:

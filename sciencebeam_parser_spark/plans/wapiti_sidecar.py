@@ -40,8 +40,10 @@ deterministic — re-sending the same payload cannot succeed — and fails
 fast as ``WapitiProtocolError`` instead of burning all 10 retries.
 
 At scale: one sidecar per executor worker amortizes process startup
-across all tasks on that worker; sequences stream through
-``applyInPandas`` partition-parallel, and only token/label columns move.
+across all tasks on that worker. Each Arrow batch of documents (one row
+per document, its tokens as an array) goes to the sidecar as one
+``label_sequences`` call inside a partition-parallel ``mapInPandas``, and
+only token/label columns move.
 """
 from __future__ import annotations
 

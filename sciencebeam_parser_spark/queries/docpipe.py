@@ -1631,13 +1631,14 @@ def q114_alto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'I-<word>' END AS label
     FROM tokens
     """,
-    survey_ref="§2A A11/A12 model protocol — applyInPandas inference with "
-               "batch assembly/alignment (models/model.py:207-355, "
-               "model_impl.py)",
+    survey_ref="§2A A11/A12 model protocol — per-document pandas inference "
+               "(utils.map_documents) with batch assembly/alignment "
+               "(models/model.py:207-355, model_impl.py)",
     doc="The sequence-labeling stage end-to-end through "
-        "FunctionLabelModel: groupBy(doc).applyInPandas replaces the "
-        "reference's manual blank-line batch protocol, the UDF sorts by "
-        "token_seq (order doesn't survive shuffles) and enforces the "
+        "FunctionLabelModel: utils.map_documents replaces the reference's "
+        "manual blank-line batch protocol (many documents per Python "
+        "pass, each handed over sorted by token_seq, since order doesn't "
+        "survive shuffles), and the model enforces the "
         "one-label-per-token alignment assert. The mock CRF is "
         "position+shape-deterministic, so the oracle restates it as "
         "window SQL — the protocol plumbing is what's under test.",

@@ -154,9 +154,9 @@ def _mock_labels_for(toks):
     # cascade's branches, so an InMemoryRelation here is redundant —
     # interleaved warm A/B at sf0.1 measures cached vs uncached within
     # noise (±10%), and skipping materialization is strictly better for
-    # memory at scale. The cascade's own entities cache
-    # (CascadeConfig.cache_entities) stays: pandas-UDF consumers get no
-    # exchange reuse. (The XML-building consumers q88/q90 swing ~2× run
+    # memory at scale. The cascade's own entities cache (always on in
+    # run_fulltext_cascade) stays: pandas-UDF consumers get no exchange
+    # reuse. (The XML-building consumers q88/q90 swing ~2× run
     # to run from Python-worker GC state — time them twice.)
     return toks.drop("_seg"), labels
 
@@ -1823,13 +1823,13 @@ def _xml_histogram_fused(
     entities_to_tei/tei_with_jats stay the actual sinks for the queries
     that emit XML (q90, q157, q290)."""
     from collections import Counter
+    from xml.parsers import expat
 
-    import pandas as pd
     from pyspark.sql import types as T
 
     from sciencebeam_parser_spark.sinks.jats import tei_to_jats_xml
     from sciencebeam_parser_spark.sinks.tei import _build_tei
-    from sciencebeam_parser_spark.utils import repartition_for_python
+    from sciencebeam_parser_spark.utils import map_documents
 
     schema = T.StructType(
         [
@@ -1839,37 +1839,23 @@ def _xml_histogram_fused(
         ]
     )
 
-    def build_and_count(batches):
-        from xml.parsers import expat
+    def build_and_count(doc_id, doc):
+        xml = _build_tei(doc)
+        if to_jats:
+            xml = tei_to_jats_xml(xml)
+        counts = Counter()
 
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        rows = []
-        for doc_id, group in pdf.groupby("doc_id", sort=False):
-            xml = _build_tei(group)
-            if to_jats:
-                xml = tei_to_jats_xml(xml)
-            counts = Counter()
+        def start(tag, attrs):
+            counts[tag.rsplit("}", 1)[-1]] += 1
+            if track_coords and attrs.get("coords"):
+                counts["@coords"] += 1
 
-            def start(tag, attrs, counts=counts):
-                counts[tag.rsplit("}", 1)[-1]] += 1
-                if track_coords and attrs.get("coords"):
-                    counts["@coords"] += 1
+        p = expat.ParserCreate(namespace_separator="}")
+        p.StartElementHandler = start
+        p.Parse(xml, True)
+        return [(doc_id, tag, n) for tag, n in counts.items()]
 
-            p = expat.ParserCreate(namespace_separator="}")
-            p.StartElementHandler = start
-            p.Parse(xml, True)
-            rows.extend((doc_id, tag, n) for tag, n in counts.items())
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "element", "n_elements"]
-            )
-
-    return repartition_for_python(entities, "doc_id").mapInPandas(
-        build_and_count, schema=schema
-    )
+    return map_documents(entities, "doc_id", build_and_count, schema)
 
 
 def _structured_ref_entities(

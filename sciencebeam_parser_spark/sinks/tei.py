@@ -6,8 +6,8 @@ teiHeader/fileDesc/titleStmt/title, profileDesc/abstract, text/body divs
 (head/p), and back/div[@type=references]/listBibl/biblStruct; unknown
 content becomes notes (tei/common.py).
 
-Spark mapping: one grouped-map pandas UDF per doc_id assembling the XML
-string with stdlib ElementTree (write-once tree, like the reference's
+Spark mapping: ``utils.map_documents`` runs ``_build_tei`` once per doc_id,
+assembling the XML string with stdlib ElementTree (write-once tree, like the reference's
 lxml build). The output relation (doc_id, tei_xml) feeds
 ``df.write.text``/partitioned sinks; ZIP/asset bundling would be a
 ``foreachPartition`` writer.
@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from sciencebeam_parser_spark.utils import map_documents
 
 TEI_NS = "http://www.tei-c.org/ns/1.0"
 
@@ -401,29 +403,10 @@ def _build_tei(entities: pd.DataFrame) -> str:
 
 
 def entities_to_tei(entities: DataFrame) -> DataFrame:
-    """entities relation → (doc_id, tei_xml), one TEI document per doc.
-
-    Batched per PARTITION, not per group: documents average a handful of
-    entities, so groupBy().applyInPandas would pay one Python/Arrow
-    roundtrip per document. repartition_for_python co-locates each document
-    across exactly defaultParallelism partitions (exempt from AQE's
-    byte-based coalescing, which would serialize this CPU-bound build onto
-    one worker), the partition's batches are concatenated once, and a
-    pandas groupby drives _build_tei — same per-doc semantics,
-    O(partitions) roundtrips."""
-    from sciencebeam_parser_spark.utils import repartition_for_python
-
-    def build_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        out = [
-            (doc_id, _build_tei(group))
-            for doc_id, group in pdf.groupby("doc_id", sort=False)
-        ]
-        yield pd.DataFrame(out, columns=["doc_id", "tei_xml"])
-
-    return repartition_for_python(entities, "doc_id").mapInPandas(
-        build_partition, schema=TEI_OUT_SCHEMA
+    """entities relation → (doc_id, tei_xml), one TEI document per doc."""
+    return map_documents(
+        entities,
+        "doc_id",
+        lambda doc_id, doc: [(doc_id, _build_tei(doc))],
+        TEI_OUT_SCHEMA,
     )

@@ -55,64 +55,16 @@ def _parse_fonts(root) -> dict:
     return fonts
 
 
-_EMPTY_FONT = {
-    "font_id": EMPTY_FONT_ID,
-    "font_family": None,
-    "font_size": None,
-    "is_bold": None,
-    "is_italics": None,
-    "is_subscript": None,
-    "is_superscript": None,
-}
-
-
-def iter_alto_token_rows(doc_id: str, xml_bytes: bytes) -> Iterator[dict]:
-    """One dict per token, reference traversal order (parse_root)."""
-    root = ET.fromstring(xml_bytes)
-    fonts = _parse_fonts(root)
-    token_seq = 0
-    block_id = 0
-    line_id = 0
-    for page_index, page in enumerate(root.iter(f"{ALTO_NS}Page")):
-        page_number = int(page.get("PHYSICAL_IMG_NR") or (1 + page_index))
-        page_width = float(page.get("WIDTH")) if page.get("WIDTH") else None
-        page_height = float(page.get("HEIGHT")) if page.get("HEIGHT") else None
-        for block in page.iter(f"{ALTO_NS}TextBlock"):
-            block_id += 1
-            for line in block.iter(f"{ALTO_NS}TextLine"):
-                strings = list(line.iter(f"{ALTO_NS}String"))
-                if not strings:
-                    continue  # TextLine[alto:String] predicate (parser.py:89)
-                line_id += 1
-                for token_node in strings:
-                    font = fonts.get(token_node.get("STYLEREFS"), _EMPTY_FONT)
-                    yield {
-                        "doc_id": doc_id,
-                        "page_number": page_number,
-                        "block_id": block_id,
-                        "line_id": line_id,
-                        "token_seq": token_seq,
-                        "text": token_node.get("CONTENT") or "",
-                        "whitespace": " ",
-                        **font,
-                        "x": float(token_node.get("HPOS", 0)),
-                        "y": float(token_node.get("VPOS", 0)),
-                        "width": float(token_node.get("WIDTH", 0)),
-                        "height": float(token_node.get("HEIGHT", 0)),
-                        "page_width": page_width,
-                        "page_height": page_height,
-                    }
-                    token_seq += 1
-
-
 _TOKEN_COLS = [f.name for f in TOKENS_SCHEMA.fields]
 
 
 def _append_alto_token_cols(doc_id: str, xml_bytes: bytes, out: dict) -> None:
-    """Columnar variant of ``iter_alto_token_rows``: same traversal and
-    values, but appends straight into per-column lists (bound-method
-    locals) — measurably cheaper than one dict per token when a batch
-    holds hundreds of documents."""
+    """Parse one ALTO document and append its token rows to `out`, one
+    list per TOKENS_SCHEMA column, in the reference traversal order
+    (parse_root): pages → TextBlock → TextLine (lines without a String are
+    skipped) → String. Appending into per-column lists through bound-method
+    locals is measurably cheaper than one dict per token when a batch holds
+    hundreds of documents."""
     root = ET.fromstring(xml_bytes)
     font_tuples = {
         fid: (

@@ -72,6 +72,59 @@ def repartition_for_python(df, *cols):
     return df.repartition(n, *cols)
 
 
+def map_documents(df, keys, fn, schema, *, order_by=None):
+    """Run ``fn`` once per document (one group of `keys`) in Python.
+
+    The reference packs many documents into one prediction call and splits
+    the results back per document (models/model.py:207-214). Here:
+
+    - :func:`repartition_for_python` co-locates each group, so a group never
+      spans partitions and every core gets a share;
+    - one ``mapInPandas`` pass per partition, whose batches are concatenated
+      once: documents average a few dozen rows, so a
+      ``groupBy().applyInPandas`` would pay one Arrow roundtrip each;
+    - a pandas ``groupby(keys, sort=False, dropna=False)`` hands each group
+      to ``fn(key, group)``. A null key is a group of its own and arrives as
+      ``None`` (a tuple of values, ``None`` for nulls, when `keys` is a
+      list);
+    - with `order_by`, each group is sorted stably on it first (row order
+      does not survive a shuffle);
+    - ``fn`` returns an iterable of row tuples in `schema` field order, and
+      the partition's rows become one ``DataFrame.from_records``. Row tuples
+      are the only output form, since a grammar fold emits many tiny groups
+      and a frame per group would cost more than the fold.
+
+    An empty partition yields nothing. The plan is one ``Exchange
+    hashpartitioning`` plus one ``MapInPandas``, and building it starts no
+    Spark job.
+    """
+    import pandas as pd
+
+    cols = [keys] if isinstance(keys, str) else list(keys)
+    by = keys if isinstance(keys, str) else cols
+    columns = [f.name for f in schema.fields]
+
+    def none_for_nan(key):
+        if isinstance(key, tuple):
+            return tuple(None if pd.isna(k) else k for k in key)
+        return None if pd.isna(key) else key
+
+    def map_partition(batches):
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = pd.concat(pdfs, ignore_index=True)
+        rows = []
+        for key, group in pdf.groupby(by, sort=False, dropna=False):
+            if order_by is not None:
+                group = group.sort_values(order_by, kind="stable")
+            rows.extend(fn(none_for_nan(key), group))
+        if rows:
+            yield pd.DataFrame.from_records(rows, columns=columns)
+
+    return repartition_for_python(df, *cols).mapInPandas(map_partition, schema)
+
+
 def checkpoint_big(df, *cols):
     """Materialize a corpus-sized relation for multi-branch reuse.
 
@@ -104,6 +157,7 @@ def checkpoint_big(df, *cols):
 __all__ = [
     "checkpoint_big",
     "executor_singleton",
+    "map_documents",
     "preload",
     "repartition_for_python",
     "reset_singletons",

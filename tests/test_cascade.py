@@ -141,6 +141,33 @@ class TestModelProtocol:
         assert len(out) == 1
         assert out[0]["label"] == "B-<title>"
 
+    @pytest.mark.parametrize(
+        "doc_ids", [(None, None, None), ("d1", None, "d1")],
+        ids=["all_null", "mixed"],
+    )
+    @pytest.mark.parametrize("kind", ["function", "weight_table"])
+    def test_null_doc_id_tokens_are_labeled(self, spark, kind, doc_ids):
+        """A null doc_id is a document of its own: its tokens get labels
+        like any other (no crash on a partition of null-doc tokens, no
+        silently dropped rows)."""
+        from sciencebeam_parser_spark.plans.models import WeightTableLabelModel
+
+        tokens = spark.createDataFrame(
+            [(d, seq, "word") for seq, d in enumerate(doc_ids)],
+            "doc_id string, token_seq long, text string",
+        )
+        if kind == "function":
+            model = FunctionLabelModel("m", lambda texts: ["O"] * len(texts))
+        else:
+            model = WeightTableLabelModel.distribute(
+                spark, "wt_null_doc", weights={"<body>": {"bias": 1.0}}
+            )
+        out = model.apply(tokens).collect()
+        assert sorted((r["doc_id"] or "", r["token_seq"]) for r in out) == (
+            sorted((d or "", seq) for seq, d in enumerate(doc_ids))
+        )
+        assert all(r["label"] is not None for r in out)
+
 
 class TestWeightTableModel:
     """WeightTableLabelModel — the real (non-injected) A11 path: artifact

@@ -165,6 +165,49 @@ class TestPythonStageParallelism:
         )
 
 
+    @pytest.mark.parametrize(
+        "stage", ["function_model", "weight_table_model", "extract_names"]
+    )
+    def test_per_document_passes_keep_every_core(self, spark, stage):
+        """The same check for the other map_documents passes."""
+        out = per_document_pass(spark, stage)
+        assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def per_document_pass(spark, stage):
+    """One small map_documents pass: a label model over three tokens, or
+    the name grammar over two runs."""
+    if stage == "extract_names":
+        from sciencebeam_parser_spark.operators.extract_grammars import (
+            extract_names,
+        )
+
+        runs = spark.createDataFrame(
+            [("d1", "g1", 0, "<forename>", "Ada"),
+             ("d1", "g1", 1, "<surname>", "Lovelace")],
+            "doc_id string, group_id string, entity_group int, tag string, "
+            "text string",
+        )
+        return extract_names(runs)
+    from sciencebeam_parser_spark.plans.models import (
+        FunctionLabelModel,
+        WeightTableLabelModel,
+        apply_model,
+    )
+
+    if stage == "function_model":
+        model = FunctionLabelModel("m", lambda texts: ["O"] * len(texts))
+    else:
+        model = WeightTableLabelModel.distribute(
+            spark, "wt_plan", weights={"<body>": {"bias": 1.0}}
+        )
+    tokens = spark.createDataFrame(
+        [("d1", 0, "a"), ("d1", 1, "b"), ("d2", 0, "c")],
+        "doc_id string, token_seq long, text string",
+    )
+    return apply_model(tokens, model)
+
+
 @contextmanager
 def job_group(spark):
     """Run the block under a job group of its own; yields a callable that
@@ -250,6 +293,19 @@ class TestCitationMatcherJobs:
         assert n_jobs <= 17
         # as many markers resolve as under the SQL-chain matcher
         assert ents.filter(F.col("target_content_id").isNotNull()).count() == 291
+
+
+class TestLabelModelPlans:
+    @pytest.mark.parametrize("stage", ["function_model", "weight_table_model"])
+    def test_apply_model_is_one_shuffle_one_python_stage_no_job(
+        self, spark, stage
+    ):
+        with job_group(spark) as jobs:
+            out = per_document_pass(spark, stage)
+            assert jobs() == 0
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert plan.count("MapInPandas") == 1
 
 
 class TestPartitionedLayout:
