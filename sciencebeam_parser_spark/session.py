@@ -32,6 +32,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session: ``master`` defaults to
+    ``local[$SPARK_GRAFT_CPUS]``, ``extra_conf`` is applied last.
+
+    Python workers fork from ``sciencebeam_parser_spark.worker_daemon``,
+    which spares every Python task a re-read of Spark's zip archives. The
+    daemon process imports it from its working directory or an install,
+    like any package kernel. A session built without this function (e.g.
+    by a caller of ``__spark_entry__``) runs pyspark's own daemon: same
+    results, more CPU per Python task.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -72,6 +82,13 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # every Python task calls importlib.invalidate_caches(), and each
+        # zipimporter answers by re-reading its whole archive: ~128 ms CPU
+        # a task over pyspark.zip, py4j and the spark-core jar (measured on
+        # a warm worker). This daemon re-reads only a changed archive.
+        .config(
+            "spark.python.daemon.module", "sciencebeam_parser_spark.worker_daemon"
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

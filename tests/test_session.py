@@ -97,3 +97,29 @@ def test_stopped_session_leaves_no_residue():
     # Spark removed on stop
     assert got["used"] == ["model", "part_sf0.001"]
     assert not os.path.exists(got["root"])
+
+
+def test_warm_python_task_rereads_no_zip_archive(spark):
+    # every task's set-up calls importlib.invalidate_caches(); with
+    # pyspark's own daemon each call re-reads ~16 zip directories
+    def zip_rereads(_):
+        import importlib
+        import zipimport
+
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield len(reads)
+
+    rdd = spark.sparkContext.parallelize(range(4), 4)
+    rdd.mapPartitions(zip_rereads).collect()  # warm the workers
+    assert rdd.mapPartitions(zip_rereads).collect() == [0, 0, 0, 0]
