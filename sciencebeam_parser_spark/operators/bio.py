@@ -14,7 +14,10 @@
 
 All are pure window/aggregate SQL — the gaps-and-islands pattern — so they
 whole-stage-codegen and scale linearly in tokens with one shuffle on
-(partition keys).
+(partition keys). The fulltext cascade groups its islands in its own
+per-document Python pass (``plans.cascade``); ``group_bio_entities`` stays
+the SQL form for the query callers and is that kernel's parity reference
+(``tests/test_cascade.py::TestBioParity``).
 """
 from __future__ import annotations
 

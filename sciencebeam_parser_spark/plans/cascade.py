@@ -1,6 +1,6 @@
 """The fulltext cascade (SURVEY §2A A28): segmentation → per-region models →
-entity extraction → id assignment → citation matching, as a config-gated
-DataFrame DAG.
+entity extraction → id assignment → citation matching, one document at a
+time.
 
 Reference: processors/fulltext/processor.py:180-274
 (``FullTextProcessor.get_semantic_document_for_layout_document``):
@@ -13,23 +13,37 @@ Reference: processors/fulltext/processor.py:180-274
   5. figure/table/reference id assignment (iter_ids, A19)
   6. citation-marker → target matching (A20)
 
+The models have labeled every token beforehand (the F2 labels table).
+Like the reference, the rest runs per document: tokens and labels are
+unioned with a side flag, and ``utils.map_documents`` hands each document's
+rows to one Python function that gates each model's labels to its region,
+then groups, types, numbers and matches the entities over lists and dicts.
+The plan is one shuffle plus one Python stage, and building it starts no
+Spark job. ``operators.bio.group_bio_entities`` is the SQL statement of the BIO
+step and the kernel's parity reference.
+
 Every stage is gated by a config flag (FullTextProcessorConfig,
-processors/fulltext/config.py:30-50); disabled branches are simply not built
-(lazy DAG = the reference's plan pruning, SURVEY §4).
+processors/fulltext/config.py:30-50); a disabled model's labels are
+filtered out before the shuffle and never reach Python (SURVEY §4 plan
+pruning).
 
 Entity-type dispatch (A16) uses the per-model tag → semantic-type tables
 (SIMPLE_SEMANTIC_CONTENT_CLASS_BY_TAG in models/*/extract.py); unmapped tags
 become 'note' (SimpleModelSemanticExtractor default, models/extract.py:55-77).
-Citation enrichment (A17/A18) adds parsed page ranges, external ids, year,
-and the validity check (>=1 of title/journal/authors/editors/ext-id/url —
-citation/extract.py:67-74, 165-179).
+Citation enrichment (A17) adds parsed page ranges, external ids and year as
+Spark Columns over the kernel's output; the A18 validity check (>=1 of
+title/journal/authors/editors/ext-id/url — citation/extract.py:67-74,
+165-179) runs in the kernel.
 """
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import re
+from collections import defaultdict
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sciencebeam_parser_spark.functions.parsers import (
     clean_abstract_text,
@@ -38,11 +52,9 @@ from sciencebeam_parser_spark.functions.parsers import (
     parse_page_range,
     split_section_label,
 )
-from sciencebeam_parser_spark.operators.bio import (
-    group_bio_entities,
-    strip_tag_prefix,
-)
-from sciencebeam_parser_spark.operators.ref_matching import match_content_ids
+from sciencebeam_parser_spark.operators.bio import TAG_PREFIX_RE
+from sciencebeam_parser_spark.operators.ref_matching import _DocMatcher
+from sciencebeam_parser_spark.utils import map_documents
 
 # tag → entity_type dispatch tables (A16), per model:
 # header: models/header/extract.py:49-53; fulltext: models/fulltext/extract.py
@@ -197,8 +209,9 @@ class CascadeConfig:
         (FullTextProcessorConfig.get_for_requested_field_names,
         processors/fulltext/config.py:58-81): an empty or unrecognized
         request keeps the full cascade; otherwise only the stages that
-        produce the requested fields are built — Catalyst never sees the
-        pruned branches (the reference's boolean gates, our lazy DAG)."""
+        produce the requested fields run — a pruned model's labels are
+        filtered out before the shuffle and never reach Python (the
+        reference's boolean gates)."""
         from dataclasses import replace
 
         fields = set(field_names or ())
@@ -217,69 +230,51 @@ class CascadeConfig:
         )
 
 
-def _extract_all_entities(
-    tokens: DataFrame,
-    labels: DataFrame,
-    model_regions: dict,
-    region_by_seg_tag: dict,
-) -> DataFrame:
-    """BIO-group EVERY enabled model's labels in one pass.
-
-    Single-pass design (scale rationale): the reference runs each model over
-    its label-filtered view sequentially; a naive port builds one join+window
-    +agg branch per model — 4× the shuffles of the data actually needed. Here
-    the region gate and all models ride ONE tokens⋈seg join and ONE labels
-    join, with the BIO window partitioned by (doc_id, model_name): same
-    semantics (each model only sees its region's tokens; islands are per
-    model), quarter the stages, and one shuffle of the fact table instead of
-    four. model_regions: {model_name: region}; region_by_seg_tag:
-    {segmentation tag: region}.
-    """
-    seg_region_map = F.create_map(
-        *[F.lit(x) for kv in region_by_seg_tag.items() for x in kv]
-    )
-    seg = labels.filter(F.col("model_name") == "segmentation").select(
-        "doc_id",
-        "token_seq",
-        seg_region_map[strip_tag_prefix(F.col("label"))].alias("region"),
-    ).filter(F.col("region").isNotNull())
-
-    model_region_map = F.create_map(
-        *[F.lit(x) for kv in model_regions.items() for x in kv]
-    )
-    labeled = (
-        labels.filter(F.col("model_name").isin(*model_regions.keys()))
-        .join(seg, ["doc_id", "token_seq"])
-        .filter(model_region_map[F.col("model_name")] == F.col("region"))
-        .join(tokens.select("doc_id", "token_seq", "text"),
-              ["doc_id", "token_seq"])
-    )
-    ents = group_bio_entities(
-        labeled,
-        partition_cols=("doc_id", "model_name"),
-        text_col="text",
-        keep_other=False,
-    )
-    return ents.select(
-        "doc_id",
-        "model_name",
-        "entity_group",
-        "tag",
-        dispatch_entity_type().alias("entity_type"),
-        model_region_map[F.col("model_name")].alias("region"),
-        "token_start",
-        "token_end",
-        "n_tokens",
-        "text",
-    )
+# A19 content-id prefix per entity family (processor.py:241-264)
+CONTENT_ID_PREFIX = {
+    "raw_reference_text": "b",
+    "raw_figure": "fig_",
+    "raw_table": "tab_",
+    "raw_affiliation": "aff",
+}
+MARKER_TYPES = ("reference_citation", "figure_citation", "table_citation")
+# the kernel's columns after doc_id; the A17 columns go between the two
+_ENTITY_COLUMNS = (
+    "model_name", "entity_group", "tag", "entity_type", "region",
+    "token_start", "token_end", "n_tokens", "text",
+)
+_LINK_COLUMNS = ("content_id", "target_content_id", "is_valid_reference")
+_TAG_PREFIX = re.compile(TAG_PREFIX_RE)
 
 
-def _enrich_citation_fields(entities: DataFrame) -> DataFrame:
+def _bio_islands(rows):
+    """``(token_seq, label, text)`` rows in document order → one
+    ``(tag, rows)`` island each, numbered from 1 by position, as
+    ``group_bio_entities`` numbers them (models/model.py:61-79).
+
+    A ``B-`` label or a tag change starts an island. A null label has a
+    null tag: it continues the island before it, and the row after it
+    starts a new one (the SQL boundary test is NULL, which its running
+    sum skips, then true against a null previous tag)."""
+    islands = []
+    prev_tag = None
+    for row in rows:
+        label = row[1]
+        tag = None if label is None else _TAG_PREFIX.sub("", label)
+        if prev_tag is None or (
+            label is not None and (label.startswith("B-") or tag != prev_tag)
+        ):
+            islands.append((tag, []))
+        islands[-1][1].append(row)
+        prev_tag = tag
+    return islands
+
+
+def _citation_field_columns():
     """A17 scalar parsing on typed entities (citation/extract.py)."""
     pr = parse_page_range(F.col("text"))
     ext = detect_external_identifier(F.col("text"))
-    return entities.select(
-        "*",
+    return [
         F.when(F.col("entity_type") == "page_range", pr["from_page"]).alias("from_page"),
         F.when(F.col("entity_type") == "page_range", pr["to_page"]).alias("to_page"),
         F.when(F.col("entity_type") == "date", extract_year(F.col("text"))).alias("year"),
@@ -296,7 +291,7 @@ def _enrich_citation_fields(entities: DataFrame) -> DataFrame:
             F.col("entity_type") == "heading",
             split_section_label(F.col("text"))["section_label"],
         ).alias("section_label"),
-    )
+    ]
 
 
 def run_fulltext_cascade(
@@ -310,7 +305,7 @@ def run_fulltext_cascade(
     """
     config = config or CascadeConfig()
     # config gates = plan pruning (processors/fulltext/config.py:30-50):
-    # disabled models are simply absent from the single-pass gate map
+    # a disabled model's labels are filtered out before the shuffle
     model_regions: dict = {}
     if config.extract_front:
         model_regions["header"] = "front"
@@ -331,178 +326,161 @@ def run_fulltext_cascade(
         **{t: "body" for t in body_labels},
         **{t: "back" for t in config.segmentation_labels_references},
     }
-    entities = _extract_all_entities(
-        tokens, labels, model_regions, region_by_seg_tag
-    )
-    if config.merge_raw_authors:
-        # one merged raw_authors entity per (doc, model): earliest group id
-        # and span, texts joined in document order (processor.py merges the
-        # semantic blocks the same way before the name model runs)
-        is_ra = (F.col("entity_type") == "raw_authors") & (
-            F.col("region") == "front"
+    check_validity = config.extract_references and config.extract_citation_fields
+
+    both = (
+        tokens.select("doc_id", "token_seq", "text", F.lit(True).alias("_is_token"))
+        .unionByName(
+            labels.filter(
+                F.col("model_name").isin("segmentation", *model_regions)
+            ).select(
+                "doc_id", "token_seq", "model_name", "label",
+                F.lit(False).alias("_is_token"),
+            ),
+            allowMissingColumns=True,
         )
-        ra = entities.filter(is_ra)
-        merged = ra.groupBy("doc_id", "model_name").agg(
-            F.min("entity_group").alias("entity_group"),
-            F.first(F.lit("<author>")).alias("tag"),
-            F.first(F.lit("raw_authors")).alias("entity_type"),
-            F.first(F.lit("front")).alias("region"),
-            F.min("token_start").alias("token_start"),
-            F.max("token_end").alias("token_end"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("token_start", "text"))
-                    ),
-                    lambda s: s["text"],
+        # a row without a doc_id or token_seq joins no other row
+        .dropna(subset=["doc_id", "token_seq"])
+    )
+    seq_type = both.schema["token_seq"].dataType
+    types = {
+        "entity_group": T.LongType(),
+        "token_start": seq_type,
+        "token_end": seq_type,
+        "n_tokens": T.LongType(),
+        "is_valid_reference": T.BooleanType(),
+    }
+    schema = T.StructType(
+        [both.schema["doc_id"]]
+        + [
+            T.StructField(c, types.get(c, T.StringType()))
+            for c in _ENTITY_COLUMNS + _LINK_COLUMNS
+        ]
+    )
+
+    def cascade_doc(doc_id, doc):
+        texts = defaultdict(list)
+        seg_regions = defaultdict(list)
+        model_rows = defaultdict(list)
+        columns = ("_is_token", "token_seq", "text", "model_name", "label")
+        for is_token, seq, text, model, label in zip(
+            *(doc[c].tolist() for c in columns)
+        ):
+            if is_token:
+                texts[seq].append(text)
+            elif model != "segmentation":
+                model_rows[model].append((seq, label))
+            elif label is not None:
+                region = region_by_seg_tag.get(_TAG_PREFIX.sub("", label))
+                if region is not None:
+                    seg_regions[seq].append(region)
+
+        # BIO islands per model over the rows inside its region that have
+        # a token (one row per matching segmentation label and token row);
+        # text breaks token_seq ties, since row order does not survive the
+        # shuffle
+        ents = []
+        for model, rows in model_rows.items():
+            region = model_regions[model]
+            gated = sorted(
+                (
+                    (seq, label, text)
+                    for seq, label in rows
+                    for seg_region in seg_regions.get(seq, ())
+                    if seg_region == region
+                    for text in texts.get(seq, ())
                 ),
-                " ",
-            ).alias("text"),
-        )
-        entities = entities.filter(~is_ra).unionByName(
-            merged.select(*entities.columns)
-        )
-    entities = _enrich_citation_fields(entities)
+                key=lambda r: (r[0], r[2] or ""),
+            )
+            for group, (tag, members) in enumerate(_bio_islands(gated), 1):
+                if tag is None or tag == "O":
+                    continue
+                ents.append({
+                    "model_name": model,
+                    "entity_group": group,
+                    "tag": tag,
+                    "entity_type": ENTITY_TYPE_BY_TAG[model].get(tag, "note"),
+                    "region": region,
+                    "token_start": members[0][0],
+                    "token_end": members[-1][0],
+                    "n_tokens": len(members),
+                    "text": " ".join(t for _, _, t in members if t is not None),
+                    "content_id": None,
+                    "target_content_id": None,
+                    "is_valid_reference": None,
+                })
 
-    # A19 — content ids per entity family in document order
-    # (processor.py:241-264: b<n> refs, fig_<n> figures, tab_<n> tables,
-    # aff<n> affiliation addresses)
-    id_prefix = (
-        F.when(F.col("entity_type") == "raw_reference_text", "b")
-        .when(F.col("entity_type") == "raw_figure", "fig_")
-        .when(F.col("entity_type") == "raw_table", "tab_")
-        .when(F.col("entity_type") == "raw_affiliation", "aff")
-        .otherwise(F.lit(None))
+        if config.merge_raw_authors:
+            # one merged front raw_authors entity: earliest group id and
+            # span, texts joined in document order (processor.py merges the
+            # semantic blocks the same way before the name model runs)
+            def is_author(e):
+                return e["entity_type"] == "raw_authors" and e["region"] == "front"
+
+            authors = sorted(
+                filter(is_author, ents), key=lambda e: (e["token_start"], e["text"])
+            )
+            if authors:
+                merged = {
+                    **authors[0],
+                    "token_end": max(e["token_end"] for e in authors),
+                    "n_tokens": sum(e["n_tokens"] for e in authors),
+                    "text": " ".join(e["text"] for e in authors),
+                }
+                ents = [e for e in ents if not is_author(e)] + [merged]
+
+        # A19 — content ids per entity family in document order
+        for entity_type, prefix in CONTENT_ID_PREFIX.items():
+            family = sorted(
+                (e for e in ents if e["entity_type"] == entity_type),
+                key=lambda e: e["token_start"],
+            )
+            for i, e in enumerate(family):
+                e["content_id"] = f"{prefix}{i}"
+
+        # A20 — markers → content ids; a document without markers skips it
+        markers = [e for e in ents if e["entity_type"] in MARKER_TYPES]
+        if config.match_citations and markers:
+            matcher = _DocMatcher(prefix_length=1)
+            targets = sorted(
+                (e for e in ents if e["content_id"] is not None),
+                key=lambda e: e["token_start"],
+            )
+            for e in targets:
+                matcher.add(e["content_id"], e["text"])
+            for e in markers:
+                e["target_content_id"] = matcher.match(e["text"])
+
+        # A18 — validity PER REFERENCE (citation/extract.py:67-74,165-179):
+        # a raw reference is valid iff the CITATION model produced >=1
+        # valid-type entity overlapping ITS token span — not "any model,
+        # anywhere in the doc" (a header-model title must not validate the
+        # references). Overlap, not containment: the mock citation model
+        # labels the whole back region, so a field run may straddle a
+        # reference boundary.
+        if check_validity:
+            spans = [
+                (e["token_start"], e["token_end"]) for e in ents
+                if e["model_name"] == "citation"
+                and e["entity_type"] in VALID_REFERENCE_TYPES
+            ]
+            for e in ents:
+                if e["entity_type"] == "raw_reference_text":
+                    e["is_valid_reference"] = any(
+                        start <= e["token_end"] and end >= e["token_start"]
+                        for start, end in spans
+                    )
+        return [
+            (doc_id, *(e[c] for c in _ENTITY_COLUMNS + _LINK_COLUMNS))
+            for e in ents
+        ]
+
+    entities = map_documents(both, "doc_id", cascade_doc, schema)
+    # with validity on, the relation's schema carries token_start second
+    lead = ["doc_id", "token_start"] if check_validity else ["doc_id"]
+    return entities.select(
+        *lead,
+        *[c for c in _ENTITY_COLUMNS if c not in lead],
+        *_citation_field_columns(),
+        *_LINK_COLUMNS,
     )
-    entities = entities.withColumn("_id_prefix", id_prefix)
-    w = W.partitionBy("doc_id", "_id_prefix").orderBy("token_start")
-    entities = entities.withColumn(
-        "content_id",
-        F.when(
-            F.col("_id_prefix").isNotNull(),
-            F.concat(F.col("_id_prefix"), (F.row_number().over(w) - 1).cast("string")),
-        ),
-    ).drop("_id_prefix")
-
-    # the entities relation fans out to markers/targets/validity branches;
-    # materializing it once is the reference's result-cache analog (SURVEY §4)
-    entities = entities.cache()
-
-    if config.match_citations:
-        markers = entities.filter(
-            F.col("entity_type").isin(
-                "reference_citation", "figure_citation", "table_citation"
-            )
-        ).select(
-            "doc_id",
-            "model_name",
-            F.concat_ws("_", "entity_type", F.col("entity_group").cast("string")).alias(
-                "citation_id"
-            ),
-            "text",
-            "entity_group",
-        )
-        # Adaptive marker probe: with zero citation markers marker_targets
-        # is empty by construction and the left join below is the identity
-        # plus a null column. Probing the CACHED entities relation (one
-        # filter over rows the downstream branches materialize anyway)
-        # skips the matcher's shuffle, Python stage and join. Without the
-        # probe a marker-free single-doc benchmark conversion runs 22 jobs
-        # instead of 14.
-        if markers.isEmpty():
-            entities = entities.withColumn(
-                "target_content_id", F.lit(None).cast("string")
-            )
-            return _finish_cascade(entities, config)
-        targets = entities.filter(F.col("content_id").isNotNull()).select(
-            "doc_id",
-            "content_id",
-            "text",
-            F.col("token_start").alias("target_seq"),
-        )
-        matches = match_content_ids(markers, targets)
-        marker_targets = markers.join(matches, ["doc_id", "citation_id"]).select(
-            "doc_id", "model_name", "entity_group", "target_content_id"
-        )
-        # entity_group is only unique within (doc_id, model_name) — the
-        # model key keeps marker matches from leaking onto other models'
-        # same-numbered entities
-        joined = entities.join(
-            marker_targets, ["doc_id", "model_name", "entity_group"], "left"
-        )
-        # the validity branches only read pre-join columns, and the left
-        # join is row-preserving (≤1 marker_targets row per key), so they
-        # derive from the CACHED pre-join relation — two fewer embeddings
-        # of the matcher subtree in the final plan
-        return _finish_cascade(joined, config, base=entities)
-    entities = entities.withColumn(
-        "target_content_id", F.lit(None).cast("string")
-    )
-
-    return _finish_cascade(entities, config)
-
-
-def _finish_cascade(
-    entities: DataFrame,
-    config: "CascadeConfig",
-    base: DataFrame | None = None,
-) -> DataFrame:
-    """A18 validity + final shape — shared tail of run_fulltext_cascade.
-
-    ``base``: the relation to derive the reference/field spans from when
-    it differs from ``entities`` only by row-preserving appended columns
-    (the marker-target join) — same rows, smaller plan."""
-    if base is None:
-        base = entities
-    # A18 — validity PER REFERENCE (citation/extract.py:67-74,165-179):
-    # a raw reference is valid iff the CITATION model produced >=1
-    # valid-type entity overlapping ITS token span — not "any model,
-    # anywhere in the doc" (a header-model title must not validate the
-    # references). Overlap, not containment: the mock citation model
-    # labels the whole back region, so a field run may straddle a
-    # reference boundary.
-    if config.extract_references and config.extract_citation_fields:
-        refs = base.filter(
-            F.col("entity_type") == "raw_reference_text"
-        ).select(
-            F.col("doc_id").alias("_r_doc"),
-            F.col("token_start").alias("_r_start"),
-            F.col("token_end").alias("_r_end"),
-        )
-        fields = base.filter(
-            (F.col("model_name") == "citation")
-            & F.col("entity_type").isin(*VALID_REFERENCE_TYPES)
-        ).select(
-            F.col("doc_id").alias("_f_doc"),
-            F.col("token_start").alias("_f_start"),
-            F.col("token_end").alias("_f_end"),
-        )
-        valid_refs = (
-            refs.join(
-                fields,
-                (F.col("_f_doc") == F.col("_r_doc"))
-                & (F.col("_f_start") <= F.col("_r_end"))
-                & (F.col("_f_end") >= F.col("_r_start")),
-            )
-            .select(
-                F.col("_r_doc").alias("doc_id"),
-                F.col("_r_start").alias("token_start"),
-            )
-            .distinct()
-            .withColumn("_has_valid_ref_fields", F.lit(True))
-        )
-        entities = entities.join(
-            valid_refs, ["doc_id", "token_start"], "left"
-        ).withColumn(
-            "is_valid_reference",
-            F.when(
-                F.col("entity_type") == "raw_reference_text",
-                F.coalesce("_has_valid_ref_fields", F.lit(False)),
-            ),
-        ).drop("_has_valid_ref_fields")
-    else:
-        entities = entities.withColumn(
-            "is_valid_reference", F.lit(None).cast("boolean")
-        )
-    return entities

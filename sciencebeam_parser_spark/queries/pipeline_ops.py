@@ -60,8 +60,7 @@ def _build_shared_cascade(spark: SparkSession, sf_dir: str):
     # handful of partitions, and the default MEMORY_AND_DISK level
     # unrolls deserialized rows in-heap — at 100x scale the
     # checkpoint stage OOM'd the JVM (measured in the BASELINE scale
-    # smoke). doc_id partitioning also pre-aligns the cascade's
-    # window stages.
+    # smoke).
     toks = checkpoint_big(toks, "doc_id")
     labels = checkpoint_big(labels, "doc_id")
     ents = checkpoint_big(run_fulltext_cascade(toks, labels))
@@ -149,15 +148,12 @@ def _mock_labels_for(toks):
             "'citation', _l_cit) AS (model_name, label)"
         ),
     )
-    # Deliberately NOT cached: since the single-projection stack unpivot,
-    # ReuseExchange dedups the repeated fixture subtrees across the
-    # cascade's branches, so an InMemoryRelation here is redundant —
-    # interleaved warm A/B at sf0.1 measures cached vs uncached within
-    # noise (±10%), and skipping materialization is strictly better for
-    # memory at scale. The cascade's own entities cache (always on in
-    # run_fulltext_cascade) stays: pandas-UDF consumers get no exchange
-    # reuse. (The XML-building consumers q88/q90 swing ~2× run
-    # to run from Python-worker GC state — time them twice.)
+    # Deliberately NOT cached: the cascade reads the tokens and these
+    # labels once each, so an InMemoryRelation here would only cost
+    # memory at scale (interleaved warm A/B at sf0.1 measured cached vs
+    # uncached within noise, ±10%). (The XML-building consumers q88/q90
+    # swing ~2× run to run from Python-worker GC state — time them
+    # twice.)
     return toks.drop("_seg"), labels
 
 
@@ -1099,10 +1095,11 @@ def q123_model_xml_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§3.1 /api/convert includes= field selection → plan pruning "
                "(FullTextProcessorConfig.get_for_requested_field_names, "
                "processors/fulltext/config.py:58-81); §2A A28 config gates",
-    doc="The cascade with includes=title,abstract: only the header branch "
-        "is BUILT (lazy DAG = the reference's boolean gates) — no "
-        "fulltext/reference/citation stages, no matching, no validity "
-        "join; Catalyst never sees the pruned subtrees.",
+    doc="The cascade with includes=title,abstract: only segmentation and "
+        "header labels enter the per-document pass (the reference's "
+        "boolean gates) — no fulltext/reference/citation models, no "
+        "matching, no validity stage; the pruned models' labels are "
+        "filtered out before the shuffle.",
 )
 def q164_requested_fields_cascade(
     spark: SparkSession, sf_dir: str
@@ -2407,12 +2404,11 @@ def _build_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("token_seq") + 1).cast("long").alias("token_seq"),
         "text",
     )
-    # the cascade references its inputs from many branches; without a
-    # checkpoint every branch re-runs the WHOLE ingest (file scan +
-    # sidecar + ALTO parse — measured ~20 plan copies at 10x). The
-    # token stream checkpoints FIRST so the labels derivation (and
-    # its own checkpoint) reads the materialized tokens instead of
-    # re-running the ingest a second time.
+    # the tokens feed both the labels derivation and the cascade;
+    # without a checkpoint each re-runs the WHOLE ingest (file scan +
+    # sidecar + ALTO parse). The token stream checkpoints FIRST so the
+    # labels derivation (and its own checkpoint) reads the materialized
+    # tokens instead of re-running the ingest a second time.
     toks = checkpoint_big(toks, "doc_id")
     toks, labels = _mock_labels_for(toks)
     labels = checkpoint_big(labels, "doc_id")

@@ -1,10 +1,20 @@
 """Cascade integration test — the mock-model trick from the reference's
 tests/processors/fulltext/processor_test.py: every model is replaced by a
-deterministic label table, so the full cascade runs as pure SQL.
+deterministic label table, so the full cascade runs without a model.
+
+Expected entity rows marked "recorded" were produced by the cascade's
+former SQL statement (joins, windows and a cached relation) on the same
+inputs; the per-document kernel must reproduce them row for row.
 """
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
+from sciencebeam_parser_spark.operators.bio import (
+    group_bio_entities,
+    strip_tag_prefix,
+)
 from sciencebeam_parser_spark.plans.cascade import CascadeConfig, run_fulltext_cascade
 from sciencebeam_parser_spark.plans.models import (
     DataFrameLabelModel,
@@ -60,6 +70,67 @@ def doc(spark):
     return tokens, labels
 
 
+ROW_COLUMNS = (
+    "doc_id", "model_name", "entity_group", "tag", "entity_type", "region",
+    "token_start", "token_end", "n_tokens", "text", "content_id",
+    "target_content_id", "is_valid_reference",
+)
+TOKENS = "doc_id string, token_seq long, text string"
+LABELS = "doc_id string, token_seq long, model_name string, label string"
+
+
+def entity_rows(ents):
+    return sorted(
+        (tuple(r[c] for c in ROW_COLUMNS) for r in ents.collect()),
+        key=lambda r: (str(r[0]), r[1], r[2]),
+    )
+
+
+def schema_of(ents):
+    return [(f.name, f.dataType.simpleString()) for f in ents.schema.fields]
+
+
+def doc_rows(doc_id, words, extra=()):
+    """Token and label rows for one document: ``words`` holds (text,
+    segmentation label, model, label) per token from token_seq 1; ``extra``
+    adds (token_seq, model, label) rows."""
+    tokens = [(doc_id, seq, w[0]) for seq, w in enumerate(words, 1)]
+    labels = [
+        row
+        for seq, (_, seg, model, label) in enumerate(words, 1)
+        for row in ((doc_id, seq, "segmentation", seg), (doc_id, seq, model, label))
+    ]
+    return tokens, labels + [(doc_id, seq, m, lb) for seq, m, lb in extra]
+
+
+TRAILING_COLUMNS = [
+    ("from_page", "string"), ("to_page", "string"), ("year", "int"),
+    ("external_id_type", "string"), ("external_id_value", "string"),
+    ("clean_abstract", "string"), ("section_label", "string"),
+    ("content_id", "string"), ("target_content_id", "string"),
+    ("is_valid_reference", "boolean"),
+]
+# recorded: with the validity stage on, token_start is the second column
+VALIDITY_SCHEMA = [
+    ("doc_id", "string"), ("token_start", "bigint"), ("model_name", "string"),
+    ("entity_group", "bigint"), ("tag", "string"), ("entity_type", "string"),
+    ("region", "string"), ("token_end", "bigint"), ("n_tokens", "bigint"),
+    ("text", "string"),
+] + TRAILING_COLUMNS
+PRUNED_SCHEMA = [
+    ("doc_id", "string"), ("model_name", "string"), ("entity_group", "bigint"),
+    ("tag", "string"), ("entity_type", "string"), ("region", "string"),
+    ("token_start", "bigint"), ("token_end", "bigint"), ("n_tokens", "bigint"),
+    ("text", "string"),
+] + TRAILING_COLUMNS
+HEADER_ROWS = [
+    ("d1", "header", 1, "<title>", "title", "front", 0, 1, 2, "Deep Spark",
+     None, None, None),
+    ("d1", "header", 2, "<abstract>", "abstract", "front", 2, 4, 3,
+     "Abstract: We study", None, None, None),
+]
+
+
 class TestCascade:
     def test_extracts_front_body_and_references(self, spark, doc):
         tokens, labels = doc
@@ -85,22 +156,265 @@ class TestCascade:
         assert by_type["figure_citation"][0]["target_content_id"] == "fig_0"
         # A18 validity: citation fields include author/date → valid
         assert by_type["raw_reference_text"][0]["is_valid_reference"] is True
+        # recorded
+        assert schema_of(ents) == VALIDITY_SCHEMA
+        assert entity_rows(ents) == [
+            ("d1", "citation", 1, "<author>", "raw_authors", "back", 14, 14, 1,
+             "Smith", None, None, None),
+            ("d1", "citation", 2, "<date>", "date", "back", 15, 15, 1, "2020",
+             None, None, None),
+            ("d1", "fulltext", 1, "<section>", "heading", "body", 5, 6, 2,
+             "1. Intro", None, None, None),
+            ("d1", "fulltext", 3, "<figure_marker>", "figure_citation", "body",
+             8, 9, 2, "Figure 1", None, "fig_0", None),
+            ("d1", "fulltext", 4, "<figure>", "raw_figure", "body", 10, 12, 3,
+             "Figure 1 caption", "fig_0", None, None),
+            *HEADER_ROWS,
+            ("d1", "reference_segmenter", 1, "<label>", "reference_label",
+             "back", 13, 13, 1, "[1]", None, None, None),
+            ("d1", "reference_segmenter", 2, "<reference>",
+             "raw_reference_text", "back", 14, 15, 2, "Smith 2020", "b0", None,
+             True),
+        ]
 
     def test_config_gating_prunes_stages(self, spark, doc):
         tokens, labels = doc
-        ents = run_fulltext_cascade(
-            tokens,
-            labels,
+        for config in (
             CascadeConfig(
                 extract_body_sections=False,
                 extract_references=False,
                 match_citations=False,
             ),
+            CascadeConfig().for_requested_field_names({"title", "abstract"}),
+        ):
+            ents = run_fulltext_cascade(tokens, labels, config)
+            types = {r["entity_type"] for r in ents.collect()}
+            assert "title" in types
+            assert "heading" not in types
+            assert "raw_reference_text" not in types
+            # recorded
+            assert schema_of(ents) == PRUNED_SCHEMA
+            assert entity_rows(ents) == HEADER_ROWS
+
+    def test_conversion_leaves_no_persistent_rdd(self, spark, doc):
+        """A conversion caches nothing: no persistent RDD outlives it (a
+        long-lived conversion service would otherwise grow without
+        bound)."""
+        from sciencebeam_parser_spark.sinks.tei import entities_to_tei
+
+        def persistent_ids():
+            return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+        # a document id of its own: the relation matches no plan an earlier
+        # test may have cached
+        doc_id = F.lit(f"leak-{uuid.uuid4().hex}")
+        tokens, labels = (df.withColumn("doc_id", doc_id) for df in doc)
+        before = persistent_ids()
+        tei = entities_to_tei(run_fulltext_cascade(tokens, labels))
+        tei.write.format("noop").mode("overwrite").save()
+        assert persistent_ids() - before == set()
+
+
+HEADER = [
+    ("Deep", "I-<header>", "header", "B-<title>"),
+    ("Spark", "I-<header>", "header", "I-<title>"),
+]
+
+
+def body(*words):
+    return [(text, "I-<body>", "fulltext", label) for text, label in words]
+
+
+REFERENCES = [
+    (text, "I-<references>", "reference_segmenter", label)
+    for text, label in [
+        ("Smith", "B-<reference>"), ("Deep", "I-<reference>"),
+        ("Jones", "B-<reference>"), ("Nets", "I-<reference>"),
+        ("Brown", "B-<reference>"), ("2020", "I-<reference>"),
+    ]
+]
+# a title straddling references 1 and 2; a date (not a validating type)
+# inside reference 3
+CITATION_FIELDS = [
+    (1, "citation", "O"), (2, "citation", "B-<title>"),
+    (3, "citation", "I-<title>"), (4, "citation", "O"),
+    (5, "citation", "O"), (6, "citation", "B-<date>"),
+]
+
+
+def _edge_case(name):
+    """(tokens, labels, tokens DDL, labels DDL, recorded rows) per case."""
+    if name == "null_doc_id":
+        t1, l1 = doc_rows("d1", HEADER)
+        t0, l0 = doc_rows(None, HEADER)
+        return t1 + t0, l1 + l0, TOKENS, LABELS, [
+            ("d1", "header", 1, "<title>", "title", "front", 1, 2, 2,
+             "Deep Spark", None, None, None),
+        ]
+    if name == "int_doc_id":
+        t, lb = doc_rows(7, HEADER + body(
+            ("Figure", "B-<figure>"), ("1", "I-<figure>"),
+            ("Figure", "B-<figure_marker>"), ("1", "I-<figure_marker>"),
+        ))
+        return (
+            t, lb, TOKENS.replace("doc_id string", "doc_id int"),
+            LABELS.replace("doc_id string", "doc_id int"), [
+                (7, "fulltext", 1, "<figure>", "raw_figure", "body", 3, 4, 2,
+                 "Figure 1", "fig_0", None, None),
+                (7, "fulltext", 2, "<figure_marker>", "figure_citation",
+                 "body", 5, 6, 2, "Figure 1", None, "fig_0", None),
+                (7, "header", 1, "<title>", "title", "front", 1, 2, 2,
+                 "Deep Spark", None, None, None),
+            ],
         )
-        types = {r["entity_type"] for r in ents.collect()}
-        assert "title" in types
-        assert "heading" not in types
-        assert "raw_reference_text" not in types
+    if name == "markers_without_targets":
+        t, lb = doc_rows("d1", body(
+            ("See", "O"), ("Figure", "B-<figure_marker>"),
+            ("2", "I-<figure_marker>"), ("[3]", "B-<citation_marker>"),
+            ("Table", "B-<table_marker>"), ("1", "I-<table_marker>"),
+            ("text", "B-<paragraph>"),
+        ))
+        return t, lb, TOKENS, LABELS, [
+            ("d1", "fulltext", 2, "<figure_marker>", "figure_citation", "body",
+             2, 3, 2, "Figure 2", None, None, None),
+            ("d1", "fulltext", 3, "<citation_marker>", "reference_citation",
+             "body", 4, 4, 1, "[3]", None, None, None),
+            ("d1", "fulltext", 4, "<table_marker>", "table_citation", "body",
+             5, 6, 2, "Table 1", None, None, None),
+            ("d1", "fulltext", 5, "<paragraph>", "paragraph", "body", 7, 7, 1,
+             "text", None, None, None),
+        ]
+    if name == "vote_tie":
+        # 'Figure' votes once for each figure (tie → null); 'alpha' votes
+        # for fig_0 alone
+        t, lb = doc_rows("d1", body(
+            ("Figure", "B-<figure_marker>"), ("alpha", "B-<figure_marker>"),
+            ("Figure", "B-<figure>"), ("alpha", "I-<figure>"),
+            ("Figure", "B-<figure>"), ("beta", "I-<figure>"),
+        ))
+        return t, lb, TOKENS, LABELS, [
+            ("d1", "fulltext", 1, "<figure_marker>", "figure_citation", "body",
+             1, 1, 1, "Figure", None, None, None),
+            ("d1", "fulltext", 2, "<figure_marker>", "figure_citation", "body",
+             2, 2, 1, "alpha", None, "fig_0", None),
+            ("d1", "fulltext", 3, "<figure>", "raw_figure", "body", 3, 4, 2,
+             "Figure alpha", "fig_0", None, None),
+            ("d1", "fulltext", 4, "<figure>", "raw_figure", "body", 5, 6, 2,
+             "Figure beta", "fig_1", None, None),
+        ]
+    assert name == "straddling_field"
+    t, lb = doc_rows("d1", REFERENCES, extra=CITATION_FIELDS)
+    return t, lb, TOKENS, LABELS, [
+        ("d1", "citation", 2, "<title>", "title", "back", 2, 3, 2,
+         "Deep Jones", None, None, None),
+        ("d1", "citation", 4, "<date>", "date", "back", 6, 6, 1, "2020", None,
+         None, None),
+        ("d1", "reference_segmenter", 1, "<reference>", "raw_reference_text",
+         "back", 1, 2, 2, "Smith Deep", "b0", None, True),
+        ("d1", "reference_segmenter", 2, "<reference>", "raw_reference_text",
+         "back", 3, 4, 2, "Jones Nets", "b1", None, True),
+        ("d1", "reference_segmenter", 3, "<reference>", "raw_reference_text",
+         "back", 5, 6, 2, "Brown 2020", "b2", None, False),
+    ]
+
+
+class TestRecordedEdgeRows:
+    @pytest.mark.parametrize(
+        "name",
+        ["null_doc_id", "int_doc_id", "markers_without_targets", "vote_tie",
+         "straddling_field"],
+    )
+    def test_rows(self, spark, name):
+        tokens, labels, tokens_ddl, labels_ddl, expected = _edge_case(name)
+        ents = run_fulltext_cascade(
+            spark.createDataFrame(tokens, tokens_ddl),
+            spark.createDataFrame(labels, labels_ddl),
+        )
+        assert entity_rows(ents) == expected
+        doc_type = "int" if name == "int_doc_id" else "string"
+        assert schema_of(ents) == [("doc_id", doc_type)] + VALIDITY_SCHEMA[1:]
+
+
+class TestBioParity:
+    """The kernel's BIO islands against the SQL statement of the same rule,
+    ``group_bio_entities`` over the region-gated rows with a token."""
+
+    P, S = "<paragraph>", "<section>"
+    # per document: (text, segmentation tag, fulltext label) from token_seq
+    # 1; NO_TOKEN lists the (doc, token_seq) left without a token row
+    SEQUENCES = {
+        "b_restart": [("a", "<body>", "B-" + P), ("b", "<body>", "I-" + P),
+                      ("c", "<body>", "B-" + P), ("d", "<body>", "I-" + P)],
+        "tag_change": [("a", "<body>", "I-" + P), ("b", "<body>", "I-" + S),
+                       ("c", "<body>", "I-" + P)],
+        "o_runs": [("a", "<body>", "B-" + P), ("b", "<body>", "O"),
+                   ("c", "<body>", "O"), ("d", "<body>", "I-" + P),
+                   ("e", "<body>", "O"), ("f", "<body>", "B-" + S)],
+        "outside_region": [("a", "<body>", "I-" + P),
+                           ("b", "<header>", "I-" + P),
+                           ("c", "<body>", "I-" + P),
+                           ("d", "<header>", "I-" + S),
+                           ("e", "<body>", "B-" + P)],
+        "no_token_row": [("a", "<body>", "I-" + P), ("b", "<body>", "I-" + S),
+                         ("c", "<body>", "I-" + P), ("d", "<body>", "I-" + S)],
+        "null_label": [("a", "<body>", None), ("b", "<body>", "I-" + P),
+                       ("c", "<body>", None), ("d", "<body>", "I-" + P),
+                       ("e", "<body>", "I-" + P), ("f", "<body>", None),
+                       ("g", "<body>", None), ("h", "<body>", "I-" + S)],
+        "null_text": [(None, "<body>", "B-" + P), ("b", "<body>", "I-" + P),
+                      (None, "<body>", "I-" + P), ("d", "<body>", "I-" + P),
+                      (None, "<body>", "B-" + S)],
+    }
+    NO_TOKEN = {("no_token_row", 2), ("no_token_row", 4)}
+
+    def test_islands_match_group_bio_entities(self, spark):
+        token_rows, label_rows = [], []
+        for doc_id, seq_rows in self.SEQUENCES.items():
+            for seq, (text, seg, label) in enumerate(seq_rows, 1):
+                if (doc_id, seq) not in self.NO_TOKEN:
+                    token_rows.append((doc_id, seq, text))
+                label_rows += [
+                    (doc_id, seq, "segmentation", "I-" + seg),
+                    (doc_id, seq, "fulltext", label),
+                ]
+        tokens = spark.createDataFrame(token_rows, TOKENS)
+        labels = spark.createDataFrame(label_rows, LABELS)
+
+        body_seqs = labels.filter(
+            (F.col("model_name") == "segmentation")
+            & (strip_tag_prefix(F.col("label")) == "<body>")
+        ).select("doc_id", "token_seq")
+        gated = (
+            labels.filter(F.col("model_name") == "fulltext")
+            .join(body_seqs, ["doc_id", "token_seq"])
+            .join(tokens, ["doc_id", "token_seq"])
+        )
+        columns = ["doc_id", "model_name", "entity_group", "tag",
+                   "token_start", "token_end", "n_tokens", "text"]
+        expected = group_bio_entities(
+            gated,
+            partition_cols=("doc_id", "model_name"),
+            text_col="text",
+            keep_other=False,
+        ).select(*columns)
+        got = run_fulltext_cascade(
+            tokens,
+            labels,
+            CascadeConfig(
+                extract_front=False, extract_references=False,
+                match_citations=False,
+            ),
+        ).select(*columns)
+        expected_rows = sorted(tuple(r) for r in expected.collect())
+        assert sorted(tuple(r) for r in got.collect()) == expected_rows
+        # the cases bite: the out-of-region token merges the run around
+        # it, and a null text is counted but not joined
+        assert ("outside_region", "fulltext", 1, self.P, 1, 3, 2, "a c") in (
+            expected_rows
+        )
+        assert ("null_text", "fulltext", 1, self.P, 1, 4, 4, "b d") in (
+            expected_rows
+        )
 
 
 class TestModelProtocol:
@@ -288,6 +602,11 @@ class TestSegmentationRegionGates:
         )
         full = run_fulltext_cascade(tokens, labels)
         assert sum(r["n_tokens"] for r in full.collect()) == 3
+        # recorded
+        assert entity_rows(full) == [
+            ("d1", "fulltext", 1, "<paragraph>", "paragraph", "body", 1, 3, 3,
+             "ack annex body", None, None, None),
+        ]
         gated = run_fulltext_cascade(
             tokens,
             labels,
@@ -298,6 +617,11 @@ class TestSegmentationRegionGates:
         rows = gated.collect()
         # only the <body> token survives the region gate
         assert sum(r["n_tokens"] for r in rows) == 1
+        # recorded
+        assert entity_rows(gated) == [
+            ("d1", "fulltext", 1, "<paragraph>", "paragraph", "body", 3, 3, 1,
+             "body", None, None, None),
+        ]
 
 
 class TestMergeRawAuthors:
@@ -334,3 +658,10 @@ class TestMergeRawAuthors:
         assert rows[0]["text"] == "alice bob"
         assert rows[0]["token_start"] == 1 and rows[0]["token_end"] == 3
         assert rows[0]["n_tokens"] == 2
+        # recorded
+        assert entity_rows(merged) == [
+            ("d1", "header", 1, "<author>", "raw_authors", "front", 1, 3, 2,
+             "alice bob", None, None, None),
+            ("d1", "header", 2, "<title>", "title", "front", 2, 2, 1, "x",
+             None, None, None),
+        ]

@@ -251,6 +251,34 @@ def marker_bearing_labels(labels):
     return labels.filter(F.col("model_name") != "fulltext").unionByName(relabeled)
 
 
+class TestCascadePlan:
+    def test_cascade_is_one_shuffle_one_python_stage_no_job(self, spark):
+        """The cascade co-locates tokens and labels once and runs one
+        Python pass per document: no broadcast, no cached relation, and
+        no job while it builds."""
+        from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+
+        tokens = spark.createDataFrame(
+            [("d1", 1, "Figure"), ("d1", 2, "1")],
+            "doc_id string, token_seq long, text string",
+        )
+        labels = spark.createDataFrame(
+            [("d1", 1, "segmentation", "B-<body>"),
+             ("d1", 2, "segmentation", "I-<body>"),
+             ("d1", 1, "fulltext", "B-<figure>"),
+             ("d1", 2, "fulltext", "I-<figure>")],
+            "doc_id string, token_seq long, model_name string, label string",
+        )
+        with job_group(spark) as jobs:
+            ents = run_fulltext_cascade(tokens, labels)
+            assert jobs() == 0
+        plan = ents._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert plan.count("MapInPandas") == 1
+        assert "BroadcastExchange" not in plan
+        assert "InMemoryRelation" not in plan
+
+
 class TestCitationMatcherJobs:
     def test_matcher_is_one_shuffle_one_python_stage_no_job(self, spark):
         from sciencebeam_parser_spark.operators.ref_matching import (
@@ -275,7 +303,8 @@ class TestCitationMatcherJobs:
     def test_marker_cascade_and_tei_job_count(self, spark):
         """The marker-bearing cascade plus the TEI sink over the sf0.001
         corpus (500 documents, one figure marker each). The per-document
-        matcher brought this from 29 jobs to 17."""
+        matcher brought this from 29 jobs to 17, the per-document cascade
+        to 3."""
         from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
         from sciencebeam_parser_spark.queries.pipeline_ops import (
             _mock_labeled_tokens,
@@ -290,7 +319,7 @@ class TestCitationMatcherJobs:
             tei = entities_to_tei(ents)
             tei.write.format("noop").mode("overwrite").save()
             n_jobs = jobs()
-        assert n_jobs <= 17
+        assert n_jobs <= 3
         # as many markers resolve as under the SQL-chain matcher
         assert ents.filter(F.col("target_content_id").isNotNull()).count() == 291
 
