@@ -60,7 +60,9 @@ def _build_shared_cascade(spark: SparkSession, sf_dir: str):
     # handful of partitions, and the default MEMORY_AND_DISK level
     # unrolls deserialized rows in-heap — at 100x scale the
     # checkpoint stage OOM'd the JVM (measured in the BASELINE scale
-    # smoke).
+    # smoke). Both checkpoints stay hash-partitioned on doc_id, so the
+    # cascade's per-document pass reads their union in place, with no
+    # shuffle of its own.
     toks = checkpoint_big(toks, "doc_id")
     labels = checkpoint_big(labels, "doc_id")
     ents = checkpoint_big(run_fulltext_cascade(toks, labels))

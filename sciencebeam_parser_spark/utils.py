@@ -16,6 +16,8 @@ from typing import Any, Callable, Dict
 
 _SINGLETONS: Dict[str, Any] = {}
 _LOCK = threading.Lock()
+_AQE = "spark.sql.adaptive.enabled"
+_AQE_FLIP_LOCK = threading.Lock()
 
 
 def executor_singleton(name: str, factory: Callable[[], Any]) -> Any:
@@ -96,7 +98,10 @@ def map_documents(df, keys, fn, schema, *, order_by=None):
 
     An empty partition yields nothing. The plan is one ``Exchange
     hashpartitioning`` plus one ``MapInPandas``, and building it starts no
-    Spark job.
+    Spark job. When the input is already co-located on `keys` (a
+    :func:`checkpoint_big` on the same columns, or a union of such
+    checkpoints) there is no Exchange: the ``MapInPandas`` reads the
+    checkpoint's partitions as they are.
     """
     import pandas as pd
 
@@ -128,13 +133,26 @@ def map_documents(df, keys, fn, schema, *, order_by=None):
 def checkpoint_big(df, *cols):
     """Materialize a corpus-sized relation for multi-branch reuse.
 
-    Two differences from a bare ``localCheckpoint()``, both learned at the
-    100x scale smoke:
+    Three differences from a bare ``localCheckpoint()``:
 
     - repartition first (by `cols`, defaultParallelism-wide via
       :func:`repartition_for_python`): explode-derived relations inherit
       the pre-explode scan's input-split sizing, so a handful of tasks
-      would each materialize a multi-GB partition.
+      would each materialize a multi-GB partition (learned at the 100x
+      scale smoke).
+    - the result keeps that layout: Spark knows it is
+      ``hashpartitioning(cols, defaultParallelism)``, so a later
+      :func:`repartition_for_python` or :func:`map_documents` on the same
+      `cols` adds no Exchange, and neither does one over a union of such
+      checkpoints (``spark.sql.unionOutputPartitioning``). The checkpoint
+      copies the partitioning its executed plan reports, and an adaptive
+      (AQE) plan reports none, so the eager action runs with
+      ``spark.sql.adaptive.enabled=false``: one job instead of AQE's
+      map-stage job plus result job. The flip is session-wide while the
+      action runs (other threads' queries on the session plan without AQE
+      meanwhile) and the previous value is restored afterwards, also when
+      the action raises. The plan upstream of the checkpoint loses AQE's
+      runtime re-planning (broadcast switch, skew split, coalescing).
     - store DISK_ONLY: the default MEMORY_AND_DISK level unrolls
       deserialized rows in the executor heap before spilling; with every
       core concurrently pinning a large partition the JVM OOMs
@@ -151,7 +169,18 @@ def checkpoint_big(df, *cols):
 
     if cols:
         df = repartition_for_python(df, *cols)
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    conf = df.sparkSession.conf
+    # one checkpoint at a time, so that a second thread never reads the
+    # first one's "false" as the value to restore
+    with _AQE_FLIP_LOCK:
+        aqe = conf.get(_AQE)
+        conf.set(_AQE, "false")
+        try:
+            return df.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.DISK_ONLY
+            )
+        finally:
+            conf.set(_AQE, aqe)
 
 
 __all__ = [

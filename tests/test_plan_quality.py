@@ -17,6 +17,7 @@ from contextlib import contextmanager
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sciencebeam_parser_spark.queries import REGISTRY
 
@@ -335,6 +336,116 @@ class TestLabelModelPlans:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 1
         assert plan.count("MapInPandas") == 1
+
+
+def checkpointed_journey_inputs(spark):
+    """The sf0.001 mock tokens and labels, each through checkpoint_big on
+    doc_id as the conversion journey stores them, and left as they are."""
+    from sciencebeam_parser_spark.queries.pipeline_ops import (
+        _mock_labeled_tokens,
+    )
+    from sciencebeam_parser_spark.utils import checkpoint_big
+
+    toks, labels = _mock_labeled_tokens(spark, SF_DIR)
+    plain = (toks.localCheckpoint(), labels.localCheckpoint())
+    return tuple(checkpoint_big(df, "doc_id") for df in plain), plain
+
+
+class TestCheckpointedJourney:
+    """checkpoint_big keeps its doc_id partitioning, so the per-document
+    stages over it read it in place: the conversion journey shuffles once
+    per checkpoint and once in the TEI sink, nowhere else."""
+
+    def test_label_models_over_a_checkpoint_need_no_exchange(self, spark):
+        from sciencebeam_parser_spark.plans.models import (
+            FunctionLabelModel,
+            apply_model,
+        )
+
+        models = [
+            FunctionLabelModel(name, lambda texts: ["O"] * len(texts))
+            for name in ("segmentation", "header", "fulltext",
+                         "reference_segmenter", "citation")
+        ]
+        (toks, _), _ = checkpointed_journey_inputs(spark)
+        with job_group(spark) as jobs:
+            per_model = [apply_model(toks, m) for m in models]
+            labels = per_model[0]
+            for more in per_model[1:]:
+                labels = labels.unionByName(more)
+            assert jobs() == 0
+        plan = labels._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert plan.count("MapInPandas") == 5
+
+    def test_cascade_over_checkpoints_is_one_python_stage_no_exchange(
+        self, spark
+    ):
+        from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+
+        (toks, labels), _ = checkpointed_journey_inputs(spark)
+        plan = (
+            run_fulltext_cascade(toks, labels)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert plan.count("Exchange hashpartitioning") == 0, plan
+        assert plan.count("MapInPandas") == 1
+
+    def test_cascade_tei_job_count(self, spark):
+        """The cascade plus the TEI sink over the two checkpoints: the
+        cascade reads them in place, and the TEI sink's one shuffle is
+        AQE's map-stage job plus the result job (3 jobs while the
+        checkpoints forgot their partitioning)."""
+        from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+        from sciencebeam_parser_spark.sinks.tei import entities_to_tei
+
+        (toks, labels), _ = checkpointed_journey_inputs(spark)
+        with job_group(spark) as jobs:
+            tei = entities_to_tei(run_fulltext_cascade(toks, labels))
+            tei.write.format("noop").mode("overwrite").save()
+            n_jobs = jobs()
+        assert n_jobs <= 2
+
+    def test_cascade_rows_match_unpartitioned_inputs(self, spark):
+        """The zipped union of the two checkpoints puts each document's
+        tokens and labels in one partition: the entities equal those of
+        the same inputs left unpartitioned."""
+        from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+
+        (toks, labels), (plain_toks, plain_labels) = (
+            checkpointed_journey_inputs(spark)
+        )
+        got = run_fulltext_cascade(toks, labels).collect()
+        want = run_fulltext_cascade(plain_toks, plain_labels).collect()
+        assert len(got) > 1000
+        assert sorted(got, key=repr) == sorted(want, key=repr)
+
+    @pytest.mark.parametrize("other", ["plain", "keyed_on_token_seq"])
+    def test_union_with_other_layout_still_reshuffles(self, spark, other):
+        """Only a union of checkpoints on the same key is co-located: with a
+        plain relation, or a checkpoint keyed on other columns, the
+        per-document pass shuffles again and still sees whole documents."""
+        from sciencebeam_parser_spark.utils import checkpoint_big, map_documents
+
+        (toks, _), (plain_toks, _) = checkpointed_journey_inputs(spark)
+        rest = plain_toks.filter(F.col("token_seq") % 2 == 0)
+        if other == "keyed_on_token_seq":
+            rest = checkpoint_big(rest, "token_seq")
+        schema = T.StructType(
+            [T.StructField("doc_id", T.StringType()),
+             T.StructField("n", T.LongType(), False)]
+        )
+        counts = map_documents(
+            toks.unionByName(rest), "doc_id",
+            lambda key, doc: [(key, len(doc))], schema,
+        )
+        plan = counts._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        want = (
+            plain_toks.unionByName(rest).groupBy("doc_id")
+            .agg(F.count("*").alias("n"))
+        )
+        assert sorted(counts.collect()) == sorted(want.collect())
 
 
 class TestPartitionedLayout:
