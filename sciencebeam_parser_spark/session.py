@@ -36,11 +36,13 @@ def get_spark(
     ``local[$SPARK_GRAFT_CPUS]``, ``extra_conf`` is applied last.
 
     Python workers fork from ``sciencebeam_parser_spark.worker_daemon``,
-    which spares every Python task a re-read of Spark's zip archives. The
-    daemon process imports it from its working directory or an install,
-    like any package kernel. A session built without this function (e.g.
-    by a caller of ``__spark_entry__``) runs pyspark's own daemon: same
-    results, more CPU per Python task.
+    which spares every Python task a re-read of Spark's zip archives and
+    forks the workers from a frozen heap with the Arrow stack imported, so
+    the ``gc.collect()`` after each task walks only what the task's worker
+    made. The daemon process imports it from its working directory or an
+    install, like any package kernel. A session built without this
+    function (e.g. by a caller of ``__spark_entry__``) runs pyspark's own
+    daemon: same results, more CPU per Python task.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -85,7 +87,11 @@ def get_spark(
         # every Python task calls importlib.invalidate_caches(), and each
         # zipimporter answers by re-reading its whole archive: ~128 ms CPU
         # a task over pyspark.zip, py4j and the spark-core jar (measured on
-        # a warm worker). This daemon re-reads only a changed archive.
+        # a warm worker). This daemon re-reads only a changed archive. Each
+        # task also ends in a full gc.collect() over ~77k objects (~40 ms);
+        # the daemon imports pandas/pyarrow and gc.freeze()s before it
+        # forks, so the walk skips them (pinned by tests/test_session.py::
+        # test_warm_arrow_task_collects_only_what_it_made).
         .config(
             "spark.python.daemon.module", "sciencebeam_parser_spark.worker_daemon"
         )

@@ -146,13 +146,15 @@ def checkpoint_big(df, *cols):
       `cols` adds no Exchange, and neither does one over a union of such
       checkpoints (``spark.sql.unionOutputPartitioning``). The checkpoint
       copies the partitioning its executed plan reports, and an adaptive
-      (AQE) plan reports none, so the eager action runs with
+      (AQE) plan reports none, so with `cols` the eager action runs with
       ``spark.sql.adaptive.enabled=false``: one job instead of AQE's
       map-stage job plus result job. The flip is session-wide while the
       action runs (other threads' queries on the session plan without AQE
       meanwhile) and the previous value is restored afterwards, also when
       the action raises. The plan upstream of the checkpoint loses AQE's
-      runtime re-planning (broadcast switch, skew split, coalescing).
+      runtime re-planning (broadcast switch, skew split, coalescing). A
+      key-less checkpoint has no layout to keep and runs with AQE as the
+      session has it, so an aggregate upstream is still coalesced.
     - store DISK_ONLY: the default MEMORY_AND_DISK level unrolls
       deserialized rows in the executor heap before spilling; with every
       core concurrently pinning a large partition the JVM OOMs
@@ -167,8 +169,10 @@ def checkpoint_big(df, *cols):
     """
     from pyspark import StorageLevel
 
-    if cols:
-        df = repartition_for_python(df, *cols)
+    if not cols:
+        # no key layout to keep: AQE may coalesce the upstream shuffle
+        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    df = repartition_for_python(df, *cols)
     conf = df.sparkSession.conf
     # one checkpoint at a time, so that a second thread never reads the
     # first one's "false" as the value to restore

@@ -123,3 +123,27 @@ def test_warm_python_task_rereads_no_zip_archive(spark):
     rdd = spark.sparkContext.parallelize(range(4), 4)
     rdd.mapPartitions(zip_rereads).collect()  # warm the workers
     assert rdd.mapPartitions(zip_rereads).collect() == [0, 0, 0, 0]
+
+
+def test_warm_arrow_task_collects_only_what_it_made(spark):
+    # after every task the worker runs a full gc.collect(); the daemon
+    # freezes its pre-imported heap, so that walk skips pyspark.worker,
+    # numpy, pandas and pyarrow (~77k objects with pyspark's own daemon)
+    def heap(batches):
+        import gc
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {"tracked": [len(gc.get_objects())], "frozen": [gc.get_freeze_count()]}
+        )
+
+    df = spark.range(0, 4, 1, 4)
+    df.mapInPandas(heap, "tracked long, frozen long").collect()  # warm
+    rows = df.mapInPandas(heap, "tracked long, frozen long").collect()
+    assert len(rows) == 4
+    for row in rows:
+        assert row.tracked < 15_000, rows
+        assert row.frozen > 50_000, rows

@@ -77,6 +77,20 @@ def test_checkpoint_big_keeps_its_partitioning(spark):
     ]
 
 
+def test_key_less_checkpoint_big_keeps_aqe_coalescing(spark):
+    """Without `cols` there is no layout to keep, so AQE still coalesces
+    the shuffle of an aggregate upstream (4 partitions without it)."""
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    docs = spark.createDataFrame(
+        [("a", 2), ("b", 1), ("a", 0), ("c", 0), ("a", 1)],
+        "doc_id string, seq long",
+    )
+    ck = checkpoint_big(docs.groupBy("doc_id").count())
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert ck.rdd.getNumPartitions() == 1
+    assert sorted(ck.collect()) == [("a", 3), ("b", 1), ("c", 1)]
+
+
 def test_checkpoint_big_restores_aqe_when_its_action_raises(spark):
     @F.udf("long")
     def boom(seq):

@@ -56,3 +56,70 @@ def test_unchanged_archive_is_not_reread(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip() == "ok"
+
+
+# the daemon's pre-fork set-up, then 8 forked children that each run the
+# Arrow round trip a worker runs (pyarrow's thread pools and jemalloc,
+# numpy's OpenBLAS threads, all started before the fork)
+_FORK_SCRIPT = """
+import gc, os, sys, time, traceback
+import pyspark.daemon  # imports pyspark.worker, as the daemon does
+from sciencebeam_parser_spark import worker_daemon
+
+worker_daemon.prepare_fork()
+
+assert "pandas" in sys.modules and "pyarrow" in sys.modules
+ours = sorted(m for m in sys.modules if m.startswith("sciencebeam_parser_spark"))
+assert ours == ["sciencebeam_parser_spark", "sciencebeam_parser_spark.worker_daemon"], ours
+assert gc.get_freeze_count() > 0
+
+def child():
+    import numpy as np
+    import pyarrow as pa
+
+    n = 1_000_000
+    ints = np.arange(n)
+    table = pa.table(
+        {"i": ints, "f": ints * 0.5, "s": pa.array(ints % 1000).cast(pa.string())}
+    )
+    back = pa.Table.from_pandas(table.to_pandas(), preserve_index=False)
+    assert back.equals(table)
+
+pids = []
+for _ in range(8):
+    pid = os.fork()
+    if pid == 0:
+        try:
+            child()
+        except BaseException:
+            traceback.print_exc()
+            os._exit(1)
+        os._exit(0)
+    pids.append(pid)
+
+deadline = time.monotonic() + 60
+codes = {}
+while len(codes) < len(pids) and time.monotonic() < deadline:
+    for pid in pids:
+        if pid not in codes:
+            done, status = os.waitpid(pid, os.WNOHANG)
+            if done:
+                codes[pid] = os.waitstatus_to_exitcode(status)
+    time.sleep(0.05)
+for pid in pids:
+    if pid not in codes:
+        os.kill(pid, 9)
+        os.waitpid(pid, 0)
+assert sorted(codes.values()) == [0] * len(pids), codes
+print("ok")
+"""
+
+
+def test_forked_workers_run_arrow_from_the_frozen_heap():
+    env = dict(os.environ, PYTHONPATH=REPO)
+    out = subprocess.run(
+        [sys.executable, "-c", _FORK_SCRIPT],
+        cwd=REPO, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip() == "ok"
