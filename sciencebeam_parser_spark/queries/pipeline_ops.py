@@ -54,7 +54,7 @@ def _shared_cascade(spark: SparkSession, sf_dir: str):
 
 def _build_shared_cascade(spark: SparkSession, sf_dir: str):
     toks, labels = _mock_labeled_tokens(spark, sf_dir)
-    # checkpoint_big = repartition(doc_id) BEFORE materializing + a
+    # checkpoint_big = repartition(doc_id) BEFORE storing + a
     # DISK_ONLY store. The token relation is an explode of documents,
     # so input-split sizing (pre-explode scan bytes) leaves it in a
     # handful of partitions, and the default MEMORY_AND_DISK level
@@ -62,7 +62,8 @@ def _build_shared_cascade(spark: SparkSession, sf_dir: str):
     # checkpoint stage OOM'd the JVM (measured in the BASELINE scale
     # smoke). Both checkpoints stay hash-partitioned on doc_id, so the
     # cascade's per-document pass reads their union in place, with no
-    # shuffle of its own.
+    # shuffle of its own. Building runs no job: the first query that
+    # reads the entities computes and stores all three relations.
     toks = checkpoint_big(toks, "doc_id")
     labels = checkpoint_big(labels, "doc_id")
     ents = checkpoint_big(run_fulltext_cascade(toks, labels))
@@ -2409,8 +2410,9 @@ def _build_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tokens feed both the labels derivation and the cascade;
     # without a checkpoint each re-runs the WHOLE ingest (file scan +
     # sidecar + ALTO parse). The token stream checkpoints FIRST so the
-    # labels derivation (and its own checkpoint) reads the materialized
-    # tokens instead of re-running the ingest a second time.
+    # labels derivation (and its own checkpoint) reads the stored tokens
+    # instead of re-running the ingest a second time; the first query
+    # over the result computes both checkpoints.
     toks = checkpoint_big(toks, "doc_id")
     toks, labels = _mock_labels_for(toks)
     labels = checkpoint_big(labels, "doc_id")

@@ -131,9 +131,9 @@ def map_documents(df, keys, fn, schema, *, order_by=None):
 
 
 def checkpoint_big(df, *cols):
-    """Materialize a corpus-sized relation for multi-branch reuse.
+    """Store a corpus-sized relation once for multi-branch reuse.
 
-    Three differences from a bare ``localCheckpoint()``:
+    Four differences from a bare ``localCheckpoint()``:
 
     - repartition first (by `cols`, defaultParallelism-wide via
       :func:`repartition_for_python`): explode-derived relations inherit
@@ -146,15 +146,24 @@ def checkpoint_big(df, *cols):
       `cols` adds no Exchange, and neither does one over a union of such
       checkpoints (``spark.sql.unionOutputPartitioning``). The checkpoint
       copies the partitioning its executed plan reports, and an adaptive
-      (AQE) plan reports none, so with `cols` the eager action runs with
-      ``spark.sql.adaptive.enabled=false``: one job instead of AQE's
-      map-stage job plus result job. The flip is session-wide while the
-      action runs (other threads' queries on the session plan without AQE
-      meanwhile) and the previous value is restored afterwards, also when
-      the action raises. The plan upstream of the checkpoint loses AQE's
-      runtime re-planning (broadcast switch, skew split, coalescing). A
-      key-less checkpoint has no layout to keep and runs with AQE as the
-      session has it, so an aggregate upstream is still coalesced.
+      (AQE) plan reports none, so with `cols` the call plans with
+      ``spark.sql.adaptive.enabled=false``. The flip is session-wide while
+      the call plans (other threads' queries on the session plan without
+      AQE meanwhile); no job runs under it, and the previous value is
+      restored afterwards, also when planning raises. The plan upstream of
+      the checkpoint loses AQE's runtime re-planning (broadcast switch,
+      skew split, coalescing). A key-less checkpoint has no layout to keep
+      and plans with AQE as the session has it, so an aggregate upstream
+      is still coalesced.
+    - the relation is stored lazily: the call runs no job for it. The
+      first action that reads the checkpoint computes each partition once
+      and stores it; later actions read the stored blocks, so values are
+      fixed by that first compute (a ``uuid()`` or ``rand()`` column reads
+      the same in every consumer), and an error in computing it surfaces
+      at that action, not here. Planning still runs what a physical plan
+      needs before it can execute: a key-less checkpoint over an adaptive
+      plan runs the upstream shuffle map stages (AQE plans the final stage
+      from their statistics), and a broadcast upstream is collected.
     - store DISK_ONLY: the default MEMORY_AND_DISK level unrolls
       deserialized rows in the executor heap before spilling; with every
       core concurrently pinning a large partition the JVM OOMs
@@ -171,7 +180,7 @@ def checkpoint_big(df, *cols):
 
     if not cols:
         # no key layout to keep: AQE may coalesce the upstream shuffle
-        return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     df = repartition_for_python(df, *cols)
     conf = df.sparkSession.conf
     # one checkpoint at a time, so that a second thread never reads the
@@ -181,7 +190,7 @@ def checkpoint_big(df, *cols):
         conf.set(_AQE, "false")
         try:
             return df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
+                eager=False, storageLevel=StorageLevel.DISK_ONLY
             )
         finally:
             conf.set(_AQE, aqe)

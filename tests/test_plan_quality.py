@@ -11,9 +11,6 @@ Spark-version formatting changes don't break them.
 """
 from __future__ import annotations
 
-import uuid
-from contextlib import contextmanager
-
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -209,21 +206,6 @@ def per_document_pass(spark, stage):
     return apply_model(tokens, model)
 
 
-@contextmanager
-def job_group(spark):
-    """Run the block under a job group of its own; yields a callable that
-    counts the Spark jobs started in the group so far."""
-    sc = spark.sparkContext
-    group = f"plan-quality-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-
-
 def marker_bearing_labels(labels):
     """Relabel each doc's first five BODY-region fulltext tokens as
     figure_marker (2 tokens) + figure (3 tokens), so every document has a
@@ -253,7 +235,9 @@ def marker_bearing_labels(labels):
 
 
 class TestCascadePlan:
-    def test_cascade_is_one_shuffle_one_python_stage_no_job(self, spark):
+    def test_cascade_is_one_shuffle_one_python_stage_no_job(
+        self, spark, job_group
+    ):
         """The cascade co-locates tokens and labels once and runs one
         Python pass per document: no broadcast, no cached relation, and
         no job while it builds."""
@@ -270,7 +254,7 @@ class TestCascadePlan:
              ("d1", 2, "fulltext", "I-<figure>")],
             "doc_id string, token_seq long, model_name string, label string",
         )
-        with job_group(spark) as jobs:
+        with job_group() as jobs:
             ents = run_fulltext_cascade(tokens, labels)
             assert jobs() == 0
         plan = ents._jdf.queryExecution().executedPlan().toString()
@@ -281,7 +265,9 @@ class TestCascadePlan:
 
 
 class TestCitationMatcherJobs:
-    def test_matcher_is_one_shuffle_one_python_stage_no_job(self, spark):
+    def test_matcher_is_one_shuffle_one_python_stage_no_job(
+        self, spark, job_group
+    ):
         from sciencebeam_parser_spark.operators.ref_matching import (
             match_content_ids,
         )
@@ -294,14 +280,14 @@ class TestCitationMatcherJobs:
             [("d1", "t1", "Figure 1", 0)],
             "doc_id string, content_id string, text string, target_seq long",
         )
-        with job_group(spark) as jobs:
+        with job_group() as jobs:
             out = match_content_ids(cit, tgt)
             assert jobs() == 0
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange hashpartitioning") == 1
         assert plan.count("MapInPandas") == 1
 
-    def test_marker_cascade_and_tei_job_count(self, spark):
+    def test_marker_cascade_and_tei_job_count(self, spark, job_group):
         """The marker-bearing cascade plus the TEI sink over the sf0.001
         corpus (500 documents, one figure marker each). The per-document
         matcher brought this from 29 jobs to 17, the per-document cascade
@@ -315,7 +301,7 @@ class TestCitationMatcherJobs:
         toks, labels = _mock_labeled_tokens(spark, SF_DIR)
         labels = marker_bearing_labels(labels).localCheckpoint()
         toks = toks.localCheckpoint()
-        with job_group(spark) as jobs:
+        with job_group() as jobs:
             ents = run_fulltext_cascade(toks, labels)
             tei = entities_to_tei(ents)
             tei.write.format("noop").mode("overwrite").save()
@@ -328,9 +314,9 @@ class TestCitationMatcherJobs:
 class TestLabelModelPlans:
     @pytest.mark.parametrize("stage", ["function_model", "weight_table_model"])
     def test_apply_model_is_one_shuffle_one_python_stage_no_job(
-        self, spark, stage
+        self, spark, stage, job_group
     ):
-        with job_group(spark) as jobs:
+        with job_group() as jobs:
             out = per_document_pass(spark, stage)
             assert jobs() == 0
         plan = out._jdf.queryExecution().executedPlan().toString()
@@ -354,9 +340,71 @@ def checkpointed_journey_inputs(spark):
 class TestCheckpointedJourney:
     """checkpoint_big keeps its doc_id partitioning, so the per-document
     stages over it read it in place: the conversion journey shuffles once
-    per checkpoint and once in the TEI sink, nowhere else."""
+    per checkpoint and once in the TEI sink, nowhere else. The checkpoints
+    are stored by the first job that reads them, not by a job of their
+    own, so the whole journey is two jobs."""
 
-    def test_label_models_over_a_checkpoint_need_no_exchange(self, spark):
+    def test_journey_is_two_jobs(self, spark, job_group):
+        """tokens checkpoint → 5 label models → labels checkpoint → cascade
+        → TEI → JATS → write: AQE's map-stage job for the TEI sink's
+        shuffle (which computes and stores both checkpoints on its way),
+        then the write (4 jobs while each checkpoint ran its own)."""
+        from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
+        from sciencebeam_parser_spark.plans.models import (
+            FunctionLabelModel,
+            apply_model,
+        )
+        from sciencebeam_parser_spark.queries.pipeline_ops import (
+            _mock_labeled_tokens,
+        )
+        from sciencebeam_parser_spark.sinks.jats import tei_with_jats
+        from sciencebeam_parser_spark.sinks.tei import entities_to_tei
+        from sciencebeam_parser_spark.utils import checkpoint_big
+
+        def regions(texts):
+            # by position: first 30% header, last 30% references
+            n, out, prev = len(texts), [], None
+            for i in range(n):
+                region = ("<header>" if i * 10 < n * 3
+                          else "<references>" if i * 10 >= n * 7
+                          else "<body>")
+                out.append(("I-" if region == prev else "B-") + region)
+                prev = region
+            return out
+
+        def spans(tag, every):
+            return lambda texts: [
+                ("B-" if i % every == 0 else "I-") + tag
+                for i in range(len(texts))
+            ]
+
+        models = [
+            FunctionLabelModel("segmentation", regions),
+            FunctionLabelModel("header", spans("<title>", 5)),
+            FunctionLabelModel("fulltext", spans("<paragraph>", 10)),
+            FunctionLabelModel("reference_segmenter", spans("<reference>", 8)),
+            FunctionLabelModel("citation", lambda texts: [
+                "B-<date>" if t.isdigit() else "O" for t in texts
+            ]),
+        ]
+        toks, _ = _mock_labeled_tokens(spark, SF_DIR)
+        with job_group() as jobs:
+            toks = checkpoint_big(toks, "doc_id")
+            per_model = [apply_model(toks, m) for m in models]
+            labels = per_model[0]
+            for more in per_model[1:]:
+                labels = labels.unionByName(more)
+            labels = checkpoint_big(labels, "doc_id")
+            tei = entities_to_tei(run_fulltext_cascade(toks, labels))
+            both = tei_with_jats(tei)
+            both.write.format("noop").mode("overwrite").save()
+            n_jobs = jobs()
+        assert n_jobs == 2
+        assert both.filter(F.col("jats_xml").contains("<title")).count() > 0
+
+    def test_label_models_over_a_checkpoint_need_no_exchange(
+        self, spark, job_group
+    ):
         from sciencebeam_parser_spark.plans.models import (
             FunctionLabelModel,
             apply_model,
@@ -368,7 +416,7 @@ class TestCheckpointedJourney:
                          "reference_segmenter", "citation")
         ]
         (toks, _), _ = checkpointed_journey_inputs(spark)
-        with job_group(spark) as jobs:
+        with job_group() as jobs:
             per_model = [apply_model(toks, m) for m in models]
             labels = per_model[0]
             for more in per_model[1:]:
@@ -391,16 +439,17 @@ class TestCheckpointedJourney:
         assert plan.count("Exchange hashpartitioning") == 0, plan
         assert plan.count("MapInPandas") == 1
 
-    def test_cascade_tei_job_count(self, spark):
-        """The cascade plus the TEI sink over the two checkpoints: the
-        cascade reads them in place, and the TEI sink's one shuffle is
-        AQE's map-stage job plus the result job (3 jobs while the
-        checkpoints forgot their partitioning)."""
+    def test_cascade_tei_job_count(self, spark, job_group):
+        """The cascade plus the TEI sink over the two checkpoints, whose
+        first read this is: the cascade reads them in place, and the TEI
+        sink's one shuffle is AQE's map-stage job (which also stores the
+        checkpoints) plus the result job (3 jobs while the checkpoints
+        forgot their partitioning)."""
         from sciencebeam_parser_spark.plans.cascade import run_fulltext_cascade
         from sciencebeam_parser_spark.sinks.tei import entities_to_tei
 
         (toks, labels), _ = checkpointed_journey_inputs(spark)
-        with job_group(spark) as jobs:
+        with job_group() as jobs:
             tei = entities_to_tei(run_fulltext_cascade(toks, labels))
             tei.write.format("noop").mode("overwrite").save()
             n_jobs = jobs()

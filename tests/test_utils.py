@@ -91,18 +91,77 @@ def test_key_less_checkpoint_big_keeps_aqe_coalescing(spark):
     assert sorted(ck.collect()) == [("a", 3), ("b", 1), ("c", 1)]
 
 
-def test_checkpoint_big_restores_aqe_when_its_action_raises(spark):
+def test_checkpoint_big_starts_no_job(spark, job_group):
+    """The call only plans the checkpoint: a keyed one over a shuffling
+    plan and a key-less one over a shuffle-free plan start no job; the
+    first read computes and stores them."""
+    docs = spark.createDataFrame(
+        [("a", 2), ("b", 1), ("a", 0), ("c", 0), ("a", 1)],
+        "doc_id string, seq long",
+    )
+    with job_group() as jobs:
+        keyed = checkpoint_big(docs.groupBy("doc_id").count(), "doc_id")
+        assert jobs() == 0
+    with job_group() as jobs:
+        key_less = checkpoint_big(docs.withColumn("seq", F.col("seq") + 1))
+        assert jobs() == 0
+    assert sorted(keyed.collect()) == [("a", 3), ("b", 1), ("c", 1)]
+    assert sorted(key_less.collect()) == [
+        ("a", 1), ("a", 2), ("a", 3), ("b", 2), ("c", 1),
+    ]
+
+
+def test_checkpoint_big_values_are_fixed_by_the_first_read(spark):
+    """A nondeterministic column reads the same in every consumer, whether
+    the first read covers some partitions or all of them."""
+    ck = checkpoint_big(
+        spark.range(40).select(
+            "id",
+            (F.col("id") % 5).cast("string").alias("doc_id"),
+            F.expr("uuid()").alias("u"),
+        ),
+        "doc_id",
+    )
+    first = ck.filter(F.col("id") == 7).limit(1).collect()
+    rows, again = ck.collect(), ck.collect()
+    by_id = {r["id"]: r["u"] for r in rows}
+    assert len(set(by_id.values())) == 40
+    assert first[0]["u"] == by_id[7]
+    assert {r["id"]: r["u"] for r in again} == by_id
+    per_doc = ck.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("u")).alias("us")
+    ).collect()
+    assert {r["doc_id"]: list(r["us"]) for r in per_doc} == {
+        doc: sorted(u for i, u in by_id.items() if str(i % 5) == doc)
+        for doc in map(str, range(5))
+    }
+
+
+def test_checkpoint_big_restores_aqe_when_its_action_raises(spark, monkeypatch):
+    """The call plans with AQE off and restores the setting, also when
+    planning raises; the stored relation's error surfaces at its first
+    read, and AQE reads as before that read too."""
     @F.udf("long")
     def boom(seq):
         raise ValueError("boom")
 
+    def no_plan(self, *args, **kwargs):
+        raise RuntimeError("no plan")
+
     docs = spark.createDataFrame([("a", 1)], "doc_id string, seq long")
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     try:
-        for value in ("false", aqe):
+        for value in ("false", "true"):
             spark.conf.set("spark.sql.adaptive.enabled", value)
+            ck = checkpoint_big(docs.withColumn("seq", boom("seq")), "doc_id")
+            assert spark.conf.get("spark.sql.adaptive.enabled") == value
             with pytest.raises(Exception, match="boom"):
-                checkpoint_big(docs.withColumn("seq", boom("seq")), "doc_id")
+                ck.collect()
+            assert spark.conf.get("spark.sql.adaptive.enabled") == value
+            with monkeypatch.context() as patch:
+                patch.setattr(type(docs), "localCheckpoint", no_plan)
+                with pytest.raises(RuntimeError, match="no plan"):
+                    checkpoint_big(docs, "doc_id")
             assert spark.conf.get("spark.sql.adaptive.enabled") == value
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
